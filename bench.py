@@ -22,165 +22,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_urgent_revenue",
-    "q4_order_priority",
-    "q12_shipmode_priority",
-    "q14_promo_revenue",
-    "q18_large_volume_customers",
-    "q19_discounted_revenue",
-    "q10_returned_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q21_waiting_suppliers",
-    "q22_global_sales_opportunity",
-    # partsupp-derived TPC-H tail (the derived relation is built inside
-    # each query; q2/q11/q16/q20 time the dim-broadcast plans, q9 the
-    # profit join over the widest fact chain)
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "q16_supplier_part_counts",
-    "q20_potential_promotion",
-    # event analytics wave: ordered funnel (min-agg join chain), weekly
-    # cohorts (integer day arithmetic), integer-exact outlier ranking,
-    # and hybrid lexical+semantic RRF fusion over bounded top-k lists
-    "events_funnel_steps",
-    "events_funnel_windowed",
-    "events_cohort_retention",
-    "events_value_extremes",
-    "doc_hybrid_rrf",
-    # interleaved text+media alignment family: synthetic stream caption
-    # mining + profile (doc-keyed windows only) and multimodal packing
-    # through the two-phase prefix sum with a per-media patch budget
-    "spans_media_captions",
-    "spans_interleave_stats",
-    "spans_pack_interleaved",
-    # the composed multimodal funnel (stats -> captions -> gate -> pack)
-    "interleaved_funnel",
-    "events_value_percentiles",
-    "events_distinct_users_hll",
-    "events_value_quantile_sketch",
-    "corpus_term_cm_freq",
-    "nation_balance_full_outer",
-    "custkeys_urgent_and_returned",
-    "events_moving_avg",
-    "events_json_props",
-    "corpus_top_terms",
-    "doc_bm25_topk",
-    "doc_index_hot_terms",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "top3_orders_per_customer",
-    "events_sessionize",
-    "events_hourly_rollup",
-    "events_asof_orders",
-    "lineitem_rollup",
-    "lineitem_cube",
-    "orders_pivot_priority",
-    "doc_stats",
-    "doc_quality_filter",
-    "doc_sample_stratified",
-    "doc_mix_temperature",
-    "doc_chunk_sliding",
-    "doc_source_quota",
-    "doc_source_token_quota",
-    "corpus_summary_stats",
-    "corpus_card",
-    "doc_vocab_coverage",
-    "doc_repetition_flags",
-    "doc_span_dedup",
-    "doc_span_dedup_apply",
-    "doc_decontaminate",
-    "doc_decontaminate_bloom",
-    "doc_holdout_split",
-    "doc_decontaminate_fuzzy",
-    "doc_mix_epochs",
-    "doc_pii_redact",
-    "doc_blocklist",
-    "doc_url_dedup",
-    "doc_token_bpe",
-    "doc_winnow_fingerprints",
-    "doc_shuffle_shards",
-    "doc_lm_perplexity",
-    "doc_lm_trigram",
-    "doc_ppl_buckets",
-    "doc_pack_sequences",
-    "doc_quality_classifier",
-    "doc_dsir_weights",
-    "doc_dsir_select",
-    "semantic_dedup",
-    "doc_classifier_topk",
-    # bpe_merges covers the BPE family in the bench; doc_bpe_tokens shares
-    # the same 12-round training loop at construction (it would re-train
-    # per timed invocation, doubling the loop cost without new signal) and
-    # stays correctness-gated via its oracle row instead
-    "bpe_merges",
-    # unigram-LM sibling: substring seed + 2 EM rounds, every job
-    # vocabulary-sized, corpus scanned once (functions/unigram.py)
-    "unigram_vocab",
-    "media_dhash",
-    "media_dhash_near_dup",
-    "media_audio_fp",
-    "media_audio_near_dup",
-    "warc_records_meta",
-    "wet_text_docs",
-    "wat_link_edges",
-    "warc_html_spans",
-    "dedup_exact",
-    "minhash_lsh_candidates",
-    "dedup_clusters",
-    "ngram_jaccard_pairs",
-    "embedding_near_dup",
-    "spans_explode",
-    "ann_cosine_topk",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "html_main_content",
-    # web link-graph family: edges/anchor-text are scan-side extraction;
-    # pagerank times the 10-iteration fixed-point join loop (the corpus is
-    # the fixed fixture graph, so this measures per-iteration scheduling
-    # + join cost, the quantity that scales with iteration count)
-    "web_link_edges",
-    "web_anchor_text",
-    "web_pagerank",
-    # hits adds the L1-normalize half-steps (two one-row broadcast
-    # aggregates per iteration) on top of pagerank's join loop
-    "web_hits",
-    # the declarative boilerplate classifier: regex segmentation +
-    # one window shuffle, the zero-Python HTML strip path
-    "html_boilerpipe_blocks",
-    # politeness scheduler: grouped two-phase prefix rank over the
-    # synthetic frontier (checkpoint + two bounded broadcasts)
-    "web_fetch_waves",
-    # crawl-policy layer: robots parse + agent selection + longest-match
-    # decisions over the link-graph frontier, and the composed
-    # robots->waves schedule (the full WHAT+WHEN crawl gate)
-    "web_robots_allowed",
-    "web_crawl_frontier",
-    # host projection + the shared fixed-point kernel on the 4-5-orders
-    # smaller domain graph, and the sitemap/graph discovery merge
-    "web_host_pagerank",
-    "web_host_communities",
-    "web_host_triangles",
-    "web_host_components",
-    "web_discovery_frontier",
-    # delay-timed schedule (one more bounded join over the frontier) and
-    # pointer-jumping redirect resolution (log2(max_hops) self-joins)
-    "web_fetch_schedule",
-    "web_redirect_resolution",
-    "web_wave_profile",
-    "web_snapshot_diff",
-    # scan-side language ID over documents: pure codegen, zero shuffle —
-    # times the per-row profile-scoring projection at corpus scale
-    "doc_langid",
-]
-
-
 def _sf_from_dir(sf_dir: str) -> float:
     import re
 
@@ -257,7 +98,7 @@ def main() -> None:
 
     from pdf_extract_spark.operators.extraction import extract_documents
     from pdf_extract_spark.plans.session import get_spark
-    from pdf_extract_spark.queries import QUERIES
+    from pdf_extract_spark.queries import HEADLINE, QUERIES
     from pdf_extract_spark.sources.raw_docs import synthetic_corpus_df
 
     spark = get_spark(

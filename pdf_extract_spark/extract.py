@@ -9,7 +9,7 @@ via --py-files and invoked inside Arrow batches.
 from __future__ import annotations
 
 from .device import PlainTextSpanDevice, spans_to_text
-from .interpreter import Processor, output_doc
+from .interpreter import Processor, output_doc, output_page
 from .pdfmini.document import Document, EncryptedPdfError, PdfError, load_mem
 
 __all__ = [
@@ -76,28 +76,24 @@ def extract_text_from_mem_encrypted(data: bytes, password: str | bytes) -> str:
     return spans_to_text(device.finish())
 
 
+def _page_spans(doc, page, page_num: int) -> list[dict]:
+    """One page on a fresh device + Processor — by-pages semantics
+    (extract_text_by_pages, lib.rs:2295-2307: fresh Processor per page,
+    lib.rs:2396), with output_doc's page setup."""
+    device = PlainTextSpanDevice()
+    output_page(doc, Processor(doc), page, page_num, device)
+    return device.finish()
+
+
 def extract_spans_page_range(data: bytes, lo: int, hi: int) -> list[tuple[int, list[dict]]]:
-    """Extract pages lo..hi (1-based, inclusive) with a fresh device +
-    Processor per page — by-pages semantics (extract_text_by_pages,
-    lib.rs:2295-2307: fresh Processor per page, lib.rs:2396).  Used by the
-    page-exploded path for giant documents."""
+    """Extract pages lo..hi (1-based, inclusive), each by-pages.  Used by
+    the page-exploded path for giant documents."""
     doc = load_mem(data)
     pages = doc.get_pages()
-    out = []
-    for page_num in range(lo, min(hi, len(pages)) + 1):
-        page = pages[page_num - 1]
-        device = PlainTextSpanDevice()
-        processor = Processor(doc)
-        resources = doc.get_inherited(page, "Resources") or {}
-        mb = doc.get_inherited(page, "MediaBox")
-        if not isinstance(mb, list) or len(mb) != 4:
-            raise ValueError("MediaBox required")
-        media_box = tuple(float(doc.deref(v)) for v in mb)
-        device.begin_page(page_num, media_box)
-        processor.process_stream(doc.get_page_content(page), resources, media_box, device)
-        device.end_page()
-        out.append((page_num, device.finish()))
-    return out
+    return [
+        (n, _page_spans(doc, pages[n - 1], n))
+        for n in range(lo, min(hi, len(pages)) + 1)
+    ]
 
 
 def page_count_of(data: bytes) -> int:
@@ -147,17 +143,7 @@ def extract_spans_by_pages(data: bytes) -> list[list[dict]]:
     (lib.rs:2396) so the font cache is not shared — output-identical,
     only a perf difference; we share one Document but fresh state."""
     doc = load_mem(data)
-    out = []
-    for page in doc.get_pages():
-        device = PlainTextSpanDevice()
-        processor = Processor(doc)
-        resources = doc.get_inherited(page, "Resources") or {}
-        mb = doc.get_inherited(page, "MediaBox")
-        if not isinstance(mb, list) or len(mb) != 4:
-            raise ValueError("MediaBox required")
-        media_box = tuple(float(doc.deref(v)) for v in mb)
-        device.begin_page(1, media_box)
-        processor.process_stream(doc.get_page_content(page), resources, media_box, device)
-        device.end_page()
-        out.append(device.finish())
-    return out
+    return [
+        _page_spans(doc, page, n)
+        for n, page in enumerate(doc.get_pages(), start=1)
+    ]

@@ -354,20 +354,26 @@ class Processor:
         output.end_word()
 
 
+def output_page(doc, processor, page, page_num, output):
+    """Interpret one page into ``output``: output_doc's per-page step,
+    shared with the by-pages API so every path sets up a page alike."""
+    resources = doc.get_inherited(page, "Resources")
+    if not isinstance(resources, dict):
+        resources = {}
+    mb = doc.get_inherited(page, "MediaBox")
+    if not isinstance(mb, list) or len(mb) != 4:
+        raise ValueError("MediaBox required")  # reference panics here
+    media_box = tuple(_num(doc.deref(v)) for v in mb)
+    output.begin_page(page_num, media_box)
+    content = doc.get_page_content(page)
+    processor.process_stream(content, resources, media_box, output)
+    output.end_page()
+
+
 def output_doc(doc, output):
     """Page walk + per-page interpretation (output_doc, lib.rs:2374-2416)."""
     pages = doc.get_pages()
     processor = Processor(doc)
     for page_num, page in enumerate(pages, start=1):
-        resources = doc.get_inherited(page, "Resources")
-        if not isinstance(resources, dict):
-            resources = {}
-        mb = doc.get_inherited(page, "MediaBox")
-        if not isinstance(mb, list) or len(mb) != 4:
-            raise ValueError("MediaBox required")  # reference panics here
-        media_box = tuple(_num(doc.deref(v)) for v in mb)
-        output.begin_page(page_num, media_box)
-        content = doc.get_page_content(page)
-        processor.process_stream(content, resources, media_box, output)
-        output.end_page()
+        output_page(doc, processor, page, page_num, output)
     return len(pages)

@@ -65,8 +65,8 @@ def resolve_href(href: Column, base: Column) -> Column:
     """Resolve an href against the page's base URL: absolute URLs pass
     through, protocol-relative (//host/path) join the base's scheme,
     root-relative paths join scheme://host, anything else (mailto:,
-    fragments, bare relative) is NULLed out and dropped by the caller.
-    Pure codegen."""
+    fragments, bare relative, or a base with no scheme to join) is NULLed
+    out and dropped by the caller.  Pure codegen."""
     scheme_host = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*)", 1)
     scheme = F.regexp_extract(base, r"^([A-Za-z][A-Za-z0-9+.\-]*):", 1)
     return (
@@ -81,7 +81,10 @@ def resolve_href(href: Column, base: Column) -> Column:
             href.startswith("//"),
             F.when(scheme != "", F.concat(scheme, F.lit(":"), href)),
         )
-        .when(href.startswith("/"), F.concat(scheme_host, href))
+        .when(
+            href.startswith("/"),
+            F.when(scheme_host != "", F.concat(scheme_host, href)),
+        )
         .otherwise(F.lit(None).cast("string"))
     )
 

@@ -29,7 +29,12 @@ DELIMITERS = b"()<>[]{}/%"
 # lexer hot-path scanners (C-speed spans instead of per-byte Python loops;
 # the lexer is the top profile entry of whole-document extraction)
 _RE_REGULAR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
-_RE_WS = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
+# A whitespace/comment run, atomic: once taken it is never re-split.  A
+# plain `(?:\s+|%...)+` before a tail that can fail backtracks through
+# every split of the run (time doubles per space) and can re-read a
+# comment's tail as tokens (`5 %0 R` lexed as a reference).
+_WS_RUN = rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+)"
+_RE_WS = re.compile(_WS_RUN)
 _RE_LITERAL_PLAIN = re.compile(rb"[^\\()]*")
 
 # One-match scalar classifier for read_object: consumes leading
@@ -53,15 +58,15 @@ _RE_OBJ_SCALAR = re.compile(
 # skip_ws + slice-compare + read_name round trips.  No match -> junk or
 # EOF, handled by the explicit fallback.
 _RE_DICT_STEP = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
+    _WS_RUN + rb"?"
     rb"(?:(?P<close>>>)|/(?P<key>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))"
 )
 # Reference tail after a non-negative integer: `G R` with the generation a
 # whole all-digits token and R a LONE token, whitespace/comments permitted
 # between tokens — exactly the conditions of the step-by-step path.
 _RE_REF_TAIL = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+(\d+)(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+R(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
+    _WS_RUN + rb"(\d+)(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
+    + _WS_RUN + rb"R(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
 )
 
 

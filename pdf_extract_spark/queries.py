@@ -22,6 +22,9 @@ rows-only checks remain.
 
 from __future__ import annotations
 
+from collections import Counter
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -4437,18 +4440,19 @@ pages AS (
          unnest(regexp_extract_all(html, '{_ANCHOR_RE_SQL}', 0)) AS a
   FROM pages
 ), links0 AS (
+  -- mirrors operators/webgraph.py resolve_href: a relative href against
+  -- a base with no scheme to join resolves to NULL, dropped in links
   SELECT src,
          CASE WHEN regexp_matches(href, '^[A-Za-z][A-Za-z0-9+.\\-]*://') THEN href
               WHEN href LIKE '//%' THEN
-                regexp_extract(src, '^([A-Za-z][A-Za-z0-9+.\\-]*):', 1) || ':' || href
+                NULLIF(regexp_extract(src, '^([A-Za-z][A-Za-z0-9+.\\-]*):', 1), '')
+                || ':' || href
               WHEN href LIKE '/%' THEN
-                regexp_extract(src, '^([A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*)', 1) || href
+                NULLIF(regexp_extract(src, '^([A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*)', 1), '')
+                || href
               ELSE NULL END AS dst_raw,
          regexp_extract(a, '{_ANCHOR_RE_SQL}', 2) AS anchor_text
   FROM (SELECT src, a, regexp_extract(a, '{_ANCHOR_RE_SQL}', 1) AS href FROM anchors)
-  WHERE CASE WHEN regexp_matches(href, '^[A-Za-z][A-Za-z0-9+.\\-]*://') THEN href
-             WHEN href LIKE '/%' THEN 'x'
-             ELSE NULL END IS NOT NULL
 ), links AS (
   -- dst canonicalized with the SAME rules as src (mirrors
   -- operators/webgraph.py canonicalizing BOTH endpoints): an absolute
@@ -4467,7 +4471,7 @@ pages AS (
            lower(regexp_extract(dst_raw, '^[^:/?#]+://([^/?#]*)', 1)) AS hostport,
            regexp_extract(dst_raw, '^[^:/?#]+://[^/?#]*([^?#]*)', 1) AS rawpath,
            anchor_text
-    FROM links0
+    FROM links0 WHERE dst_raw IS NOT NULL
   )
 )"""
 
@@ -6765,307 +6769,254 @@ ORDER BY stage_idx
 """
 
 
-QUERIES = {
-    "q1_pricing_summary": q1_pricing_summary,
-    "interleaved_funnel": interleaved_funnel,
-    "wet_text_docs": wet_text_docs,
-    "wat_link_edges": wat_link_edges_q,
-    "spans_interleaved_synth": spans_interleaved_synth,
-    "spans_media_captions": spans_media_captions,
-    "spans_interleave_stats": spans_interleave_stats,
-    "spans_pack_interleaved": spans_pack_interleaved,
-    "media_caption_mining": media_caption_mining,
-    "doc_hybrid_rrf": doc_hybrid_rrf,
-    "events_funnel_steps": events_funnel_steps,
-    "events_funnel_windowed": events_funnel_windowed,
-    "events_cohort_retention": events_cohort_retention,
-    "events_value_extremes": events_value_extremes,
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q9_product_type_profit": q9_product_type_profit,
-    "q11_important_stock": q11_important_stock,
-    "q16_supplier_part_counts": q16_supplier_part_counts,
-    "q20_potential_promotion": q20_potential_promotion,
-    "q3_top_urgent_revenue": q3_top_urgent_revenue,
-    "q4_order_priority": q4_order_priority,
-    "q12_shipmode_priority": q12_shipmode_priority,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q18_large_volume_customers": q18_large_volume_customers,
-    "q19_discounted_revenue": q19_discounted_revenue,
-    "q10_returned_revenue": q10_returned_revenue,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q8_market_share": q8_market_share,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q15_top_supplier": q15_top_supplier,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q21_waiting_suppliers": q21_waiting_suppliers,
-    "q22_global_sales_opportunity": q22_global_sales_opportunity,
-    "events_value_percentiles": events_value_percentiles,
-    "nation_balance_full_outer": nation_balance_full_outer,
-    "custkeys_urgent_and_returned": custkeys_urgent_and_returned,
-    "events_moving_avg": events_moving_avg,
-    "events_json_props": events_json_props,
-    "corpus_top_terms": corpus_top_terms,
-    "doc_bm25_topk": doc_bm25_topk,
-    "doc_index_hot_terms": doc_index_hot_terms,
-    "events_distinct_users_hll": events_distinct_users_hll,
-    "corpus_term_cm_freq": corpus_term_cm_freq,
-    "q5_nation_revenue": q5_nation_revenue,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "top3_orders_per_customer": top3_orders_per_customer,
-    "events_sessionize": events_sessionize,
-    "events_hourly_rollup": events_hourly_rollup,
-    "doc_stats": doc_stats,
-    "doc_quality_filter": doc_quality_filter,
-    "doc_sample_stratified": doc_sample_stratified,
-    "doc_mix_temperature": doc_mix_temperature,
-    "doc_chunk_sliding": doc_chunk_sliding,
-    "spans_linearize": spans_linearize,
-    "spans_pack_manifest": spans_pack_manifest,
-    "doc_source_quota": doc_source_quota,
-    "doc_source_token_quota": doc_source_token_quota,
-    "corpus_summary_stats": corpus_summary_stats,
-    "corpus_card": corpus_card,
-    "doc_vocab_coverage": doc_vocab_coverage,
-    "doc_repetition_flags": doc_repetition_flags,
-    "doc_span_dedup": doc_span_dedup,
-    "doc_span_dedup_apply": doc_span_dedup_apply,
-    "doc_decontaminate": doc_decontaminate,
-    "doc_holdout_split": doc_holdout_split,
-    "doc_mix_epochs": doc_mix_epochs,
-    "doc_decontaminate_bloom": doc_decontaminate_bloom,
-    "doc_decontaminate_fuzzy": doc_decontaminate_fuzzy,
-    "doc_pii_redact": doc_pii_redact,
-    "doc_url_dedup": doc_url_dedup,
-    "corpus_funnel": corpus_funnel,
-    "dedup_exact": dedup_exact_q,
-    "minhash_lsh_candidates": minhash_lsh_q,
-    "dedup_clusters": dedup_clusters_q,
-    "ngram_jaccard_pairs": ngram_jaccard_q,
-    "spans_explode": spans_explode,
-    "ann_cosine_topk": ann_cosine_topk,
-    "extract_pdf_spans": extract_pdf_spans,
-    "simhash_pairs": simhash_pairs,
-    "ann_lsh_topk": ann_lsh_topk,
-    "ann_ivf_topk": ann_ivf_topk,
-    "ann_pq_topk": ann_pq_topk,
-    "ann_ivfpq_topk": ann_ivfpq_topk,
-    "media_features": media_features,
-    "media_dhash": media_dhash,
-    "media_dhash_near_dup": media_dhash_near_dup,
-    "media_audio_fp": media_audio_fp,
-    "media_audio_near_dup": media_audio_near_dup,
-    "doc_blocklist": doc_blocklist,
-    "warc_records_meta": warc_records_meta,
-    "warc_html_spans": warc_html_spans,
-    "ann_recall": ann_recall,
-    "html_main_content": html_main_content,
-    "unified_spans": unified_spans,
-    "doc_metadata": doc_metadata_q,
-    "extract_paged_spans": extract_paged_spans,
-    "render_html": render_html,
-    "render_svg": render_svg,
-    "events_asof_orders": events_asof_orders,
-    "lineitem_rollup": lineitem_rollup,
-    "lineitem_cube": lineitem_cube,
-    "events_value_quantile_sketch": events_value_quantile_sketch,
-    "orders_pivot_priority": orders_pivot_priority,
-    "custkeys_without_urgent_orders": custkeys_without_urgent_orders,
-    "events_in_price_band": events_in_price_band,
-    "embedding_near_dup": embedding_near_dup,
-    "doc_token_bpe": doc_token_bpe,
-    "doc_winnow_fingerprints": doc_winnow_fingerprints,
-    "doc_lm_perplexity": doc_lm_perplexity,
-    "doc_ppl_buckets": doc_ppl_buckets,
-    "doc_lm_trigram": doc_lm_trigram,
-    "doc_pack_sequences": doc_pack_sequences,
-    "doc_quality_classifier": doc_quality_classifier,
-    "doc_dsir_weights": doc_dsir_weights,
-    "doc_dsir_select": doc_dsir_select,
-    "bpe_merges": bpe_merges,
-    "unigram_vocab": unigram_vocab,
-    "doc_unigram_tokens": doc_unigram_tokens,
-    "doc_pack_unigram": doc_pack_unigram,
-    "doc_bpe_tokens": doc_bpe_tokens,
-    "doc_pack_bpe": doc_pack_bpe,
-    "doc_shuffle_shards": doc_shuffle_shards,
-    "semantic_dedup": semantic_dedup,
-    "corpus_funnel_semantic": corpus_funnel_semantic,
-    "doc_classifier_topk": doc_classifier_topk,
-    "web_link_edges": web_link_edges,
-    "web_anchor_text": web_anchor_text,
-    "web_pagerank": web_pagerank,
-    "web_hits": web_hits,
-    "html_boilerpipe_blocks": html_boilerpipe_blocks,
-    "web_fetch_waves": web_fetch_waves,
-    "web_wave_profile": web_wave_profile,
-    "web_robots_rules": web_robots_rules,
-    "web_robots_allowed": web_robots_allowed,
-    "web_crawl_frontier": web_crawl_frontier,
-    "web_fetch_schedule": web_fetch_schedule,
-    "web_sitemap_urls": web_sitemap_urls,
-    "doc_langid": doc_langid,
-    "web_host_edges": web_host_edges,
-    "web_host_pagerank": web_host_pagerank,
-    "web_host_communities": web_host_communities,
-    "web_host_triangles": web_host_triangles,
-    "web_host_components": web_host_components,
-    "web_discovery_frontier": web_discovery_frontier,
-    "web_redirect_resolution": web_redirect_resolution,
-    "web_snapshot_diff": web_snapshot_diff,
-}
+class Query(NamedTuple):
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str  # DuckDB SQL over the same parquet tables
+    headline: bool  # timed by bench.py, in table order
 
-ORACLES = {
-    "q1_pricing_summary": Q1_SQL,
-    "interleaved_funnel": INTERLEAVED_FUNNEL_SQL,
-    "wet_text_docs": WET_TEXT_DOCS_SQL,
-    "wat_link_edges": WAT_LINK_EDGES_SQL,
-    "spans_interleaved_synth": SPANS_INTERLEAVED_SQL,
-    "spans_media_captions": SPANS_MEDIA_CAPTIONS_SQL,
-    "spans_interleave_stats": SPANS_INTERLEAVE_STATS_SQL,
-    "spans_pack_interleaved": SPANS_PACK_INTERLEAVED_SQL,
-    "media_caption_mining": MEDIA_CAPTION_MINING_SQL,
-    "doc_hybrid_rrf": DOC_HYBRID_RRF_SQL,
-    "events_funnel_steps": EVENTS_FUNNEL_SQL,
-    "events_funnel_windowed": EVENTS_FUNNEL_WINDOWED_SQL,
-    "events_cohort_retention": EVENTS_COHORT_SQL,
-    "events_value_extremes": EVENTS_EXTREMES_SQL,
-    "q2_min_cost_supplier": Q2_SQL,
-    "q9_product_type_profit": Q9_SQL,
-    "q11_important_stock": Q11_SQL,
-    "q16_supplier_part_counts": Q16_SQL,
-    "q20_potential_promotion": Q20_SQL,
-    "q3_top_urgent_revenue": Q3_SQL,
-    "q4_order_priority": Q4_SQL,
-    "q12_shipmode_priority": Q12_SQL,
-    "q14_promo_revenue": Q14_SQL,
-    "q18_large_volume_customers": Q18_SQL,
-    "q19_discounted_revenue": Q19_SQL,
-    "q10_returned_revenue": Q10_SQL,
-    "q7_volume_shipping": Q7_SQL,
-    "q8_market_share": Q8_SQL,
-    "q13_customer_distribution": Q13_SQL,
-    "q15_top_supplier": Q15_SQL,
-    "q17_small_quantity_revenue": Q17_SQL,
-    "q21_waiting_suppliers": Q21_SQL,
-    "q22_global_sales_opportunity": Q22_SQL,
-    "events_value_percentiles": EVENTS_PCTL_SQL,
-    "nation_balance_full_outer": NATION_BALANCE_SQL,
-    "custkeys_urgent_and_returned": CUST_INTERSECT_SQL,
-    "events_moving_avg": EVENTS_MAVG_SQL,
-    "events_json_props": EVENTS_JSON_SQL,
-    "corpus_top_terms": CORPUS_TOP_TERMS_SQL,
-    "doc_bm25_topk": DOC_BM25_SQL,
-    "doc_index_hot_terms": DOC_INDEX_HOT_SQL,
-    "events_distinct_users_hll": _events_hll_sql(),
-    "corpus_term_cm_freq": _corpus_cm_sql(),
-    "q5_nation_revenue": Q5_SQL,
-    "q6_forecast_revenue": Q6_SQL,
-    "top3_orders_per_customer": TOP3_SQL,
-    "events_sessionize": SESSIONIZE_SQL,
-    "events_hourly_rollup": HOURLY_SQL,
-    "doc_stats": DOC_STATS_SQL,
-    "doc_quality_filter": DOC_QUALITY_SQL,
-    "doc_sample_stratified": SAMPLE_STRATIFIED_SQL,
-    "doc_mix_temperature": MIX_TEMPERATURE_SQL,
-    "doc_chunk_sliding": CHUNK_SLIDING_SQL,
-    "spans_linearize": SPANS_LINEARIZE_SQL.format(
+
+# Each query is declared once, here.  QUERIES, ORACLES and bench.py's
+# HEADLINE are derived from this table.
+REGISTRY = [
+    Query("q1_pricing_summary", q1_pricing_summary, Q1_SQL, True),
+    Query("q3_top_urgent_revenue", q3_top_urgent_revenue, Q3_SQL, True),
+    Query("q4_order_priority", q4_order_priority, Q4_SQL, True),
+    Query("q12_shipmode_priority", q12_shipmode_priority, Q12_SQL, True),
+    Query("q14_promo_revenue", q14_promo_revenue, Q14_SQL, True),
+    Query("q18_large_volume_customers", q18_large_volume_customers,
+          Q18_SQL, True),
+    Query("q19_discounted_revenue", q19_discounted_revenue, Q19_SQL, True),
+    Query("q10_returned_revenue", q10_returned_revenue, Q10_SQL, True),
+    Query("q7_volume_shipping", q7_volume_shipping, Q7_SQL, True),
+    Query("q8_market_share", q8_market_share, Q8_SQL, True),
+    Query("q13_customer_distribution", q13_customer_distribution,
+          Q13_SQL, True),
+    Query("q15_top_supplier", q15_top_supplier, Q15_SQL, True),
+    Query("q17_small_quantity_revenue", q17_small_quantity_revenue,
+          Q17_SQL, True),
+    Query("q21_waiting_suppliers", q21_waiting_suppliers, Q21_SQL, True),
+    Query("q22_global_sales_opportunity", q22_global_sales_opportunity,
+          Q22_SQL, True),
+    # partsupp-derived TPC-H tail (the derived relation is built inside
+    # each query; q2/q11/q16/q20 time the dim-broadcast plans, q9 the
+    # profit join over the widest fact chain)
+    Query("q2_min_cost_supplier", q2_min_cost_supplier, Q2_SQL, True),
+    Query("q9_product_type_profit", q9_product_type_profit, Q9_SQL, True),
+    Query("q11_important_stock", q11_important_stock, Q11_SQL, True),
+    Query("q16_supplier_part_counts", q16_supplier_part_counts, Q16_SQL, True),
+    Query("q20_potential_promotion", q20_potential_promotion, Q20_SQL, True),
+    # event analytics wave: ordered funnel (min-agg join chain), weekly
+    # cohorts (integer day arithmetic), integer-exact outlier ranking,
+    # and hybrid lexical+semantic RRF fusion over bounded top-k lists
+    Query("events_funnel_steps", events_funnel_steps, EVENTS_FUNNEL_SQL, True),
+    Query("events_funnel_windowed", events_funnel_windowed,
+          EVENTS_FUNNEL_WINDOWED_SQL, True),
+    Query("events_cohort_retention", events_cohort_retention,
+          EVENTS_COHORT_SQL, True),
+    Query("events_value_extremes", events_value_extremes,
+          EVENTS_EXTREMES_SQL, True),
+    Query("doc_hybrid_rrf", doc_hybrid_rrf, DOC_HYBRID_RRF_SQL, True),
+    # interleaved text+media alignment family: synthetic stream caption
+    # mining + profile (doc-keyed windows only) and multimodal packing
+    # through the two-phase prefix sum with a per-media patch budget
+    Query("spans_interleaved_synth", spans_interleaved_synth,
+          SPANS_INTERLEAVED_SQL, False),
+    Query("spans_media_captions", spans_media_captions,
+          SPANS_MEDIA_CAPTIONS_SQL, True),
+    Query("spans_interleave_stats", spans_interleave_stats,
+          SPANS_INTERLEAVE_STATS_SQL, True),
+    Query("spans_pack_interleaved", spans_pack_interleaved,
+          SPANS_PACK_INTERLEAVED_SQL, True),
+    # the composed multimodal funnel (stats -> captions -> gate -> pack)
+    Query("interleaved_funnel", interleaved_funnel,
+          INTERLEAVED_FUNNEL_SQL, True),
+    Query("media_caption_mining", media_caption_mining,
+          MEDIA_CAPTION_MINING_SQL, False),
+    Query("events_value_percentiles", events_value_percentiles,
+          EVENTS_PCTL_SQL, True),
+    Query("events_distinct_users_hll", events_distinct_users_hll,
+          _events_hll_sql(), True),
+    Query("events_value_quantile_sketch", events_value_quantile_sketch,
+          _events_quantile_sql(), True),
+    Query("corpus_term_cm_freq", corpus_term_cm_freq, _corpus_cm_sql(), True),
+    Query("nation_balance_full_outer", nation_balance_full_outer,
+          NATION_BALANCE_SQL, True),
+    Query("custkeys_urgent_and_returned", custkeys_urgent_and_returned,
+          CUST_INTERSECT_SQL, True),
+    Query("custkeys_without_urgent_orders", custkeys_without_urgent_orders,
+          EXCEPT_SQL, False),
+    Query("events_moving_avg", events_moving_avg, EVENTS_MAVG_SQL, True),
+    Query("events_json_props", events_json_props, EVENTS_JSON_SQL, True),
+    Query("corpus_top_terms", corpus_top_terms, CORPUS_TOP_TERMS_SQL, True),
+    Query("doc_bm25_topk", doc_bm25_topk, DOC_BM25_SQL, True),
+    Query("doc_index_hot_terms", doc_index_hot_terms, DOC_INDEX_HOT_SQL, True),
+    Query("q5_nation_revenue", q5_nation_revenue, Q5_SQL, True),
+    Query("q6_forecast_revenue", q6_forecast_revenue, Q6_SQL, True),
+    Query("top3_orders_per_customer", top3_orders_per_customer,
+          TOP3_SQL, True),
+    Query("events_sessionize", events_sessionize, SESSIONIZE_SQL, True),
+    Query("events_hourly_rollup", events_hourly_rollup, HOURLY_SQL, True),
+    Query("events_asof_orders", events_asof_orders, ASOF_SQL, True),
+    Query("events_in_price_band", events_in_price_band, RANGE_JOIN_SQL, False),
+    Query("lineitem_rollup", lineitem_rollup, ROLLUP_SQL, True),
+    Query("lineitem_cube", lineitem_cube, CUBE_SQL, True),
+    Query("orders_pivot_priority", orders_pivot_priority, PIVOT_SQL, True),
+    Query("doc_stats", doc_stats, DOC_STATS_SQL, True),
+    Query("doc_quality_filter", doc_quality_filter, DOC_QUALITY_SQL, True),
+    Query("doc_sample_stratified", doc_sample_stratified,
+          SAMPLE_STRATIFIED_SQL, True),
+    Query("doc_mix_temperature", doc_mix_temperature,
+          MIX_TEMPERATURE_SQL, True),
+    Query("doc_chunk_sliding", doc_chunk_sliding, CHUNK_SLIDING_SQL, True),
+    Query("spans_linearize", spans_linearize, SPANS_LINEARIZE_SQL.format(
         GOLDEN_SPANS=_GOLDEN_SPANS_PARQUET,
-        GOLDEN_HTML_MAIN=_GOLDEN_HTML_MAIN_PARQUET,
-    ),
-    "spans_pack_manifest": _spans_pack_sql(),
-    "doc_source_quota": SOURCE_QUOTA_SQL,
-    "doc_source_token_quota": DOC_SOURCE_TOKEN_QUOTA_SQL,
-    "corpus_summary_stats": CORPUS_SUMMARY_SQL,
-    "corpus_card": CORPUS_CARD_SQL,
-    "doc_vocab_coverage": DOC_VOCAB_COVERAGE_SQL,
-    "doc_repetition_flags": DOC_REPETITION_SQL,
-    "doc_span_dedup": DOC_SPAN_DEDUP_SQL,
-    "doc_span_dedup_apply": DOC_SPAN_DEDUP_APPLY_SQL,
-    "doc_decontaminate": DOC_DECONTAMINATE_SQL,
-    "doc_holdout_split": DOC_HOLDOUT_SPLIT_SQL,
-    "doc_mix_epochs": DOC_MIX_EPOCHS_SQL,
-    "doc_decontaminate_bloom": _bloom_decontaminate_sql(),
-    "doc_decontaminate_fuzzy": DOC_DECONTAMINATE_FUZZY_SQL,
-    "doc_pii_redact": DOC_PII_REDACT_SQL,
-    "doc_url_dedup": DOC_URL_DEDUP_SQL,
-    "corpus_funnel": CORPUS_FUNNEL_SQL,
-    "dedup_exact": DEDUP_EXACT_SQL,
-    "minhash_lsh_candidates": MINHASH_SQL,
-    "dedup_clusters": DEDUP_CLUSTERS_SQL,
-    "ngram_jaccard_pairs": NGRAM_JACCARD_SQL,
-    "spans_explode": SPANS_EXPLODE_SQL,
-    "ann_cosine_topk": ANN_SQL,
-    "events_asof_orders": ASOF_SQL,
-    "lineitem_rollup": ROLLUP_SQL,
-    "lineitem_cube": CUBE_SQL,
-    "events_value_quantile_sketch": _events_quantile_sql(),
-    "orders_pivot_priority": PIVOT_SQL,
-    "custkeys_without_urgent_orders": EXCEPT_SQL,
-    "events_in_price_band": RANGE_JOIN_SQL,
-    "embedding_near_dup": NEAR_DUP_SQL,
-    "doc_token_bpe": BPE_SQL,
-    "doc_winnow_fingerprints": WINNOW_SQL,
-    "extract_pdf_spans": EXTRACT_SPANS_SQL,
-    "simhash_pairs": SIMHASH_SQL,
-    "doc_metadata": DOC_METADATA_SQL,
-    "extract_paged_spans": EXTRACT_PAGED_SQL,
-    "media_features": MEDIA_FEATURES_SQL,
-    "media_dhash": MEDIA_DHASH_SQL,
-    "media_dhash_near_dup": MEDIA_DHASH_PAIRS_SQL,
-    "media_audio_fp": MEDIA_AUDIO_FP_SQL,
-    "media_audio_near_dup": MEDIA_AUDIO_PAIRS_SQL,
-    "doc_blocklist": BLOCKLIST_SQL,
-    "warc_records_meta": WARC_RECORDS_SQL,
-    "warc_html_spans": WARC_HTML_SPANS_SQL,
-    "ann_recall": ANN_RECALL_SQL,
-    "html_main_content": HTML_MAIN_SQL,
-    "unified_spans": UNIFIED_SPANS_SQL,
-    "render_html": RENDER_HTML_SQL,
-    "render_svg": RENDER_SVG_SQL,
+        GOLDEN_HTML_MAIN=_GOLDEN_HTML_MAIN_PARQUET), False),
+    Query("spans_pack_manifest", spans_pack_manifest,
+          _spans_pack_sql(), False),
+    Query("doc_source_quota", doc_source_quota, SOURCE_QUOTA_SQL, True),
+    Query("doc_source_token_quota", doc_source_token_quota,
+          DOC_SOURCE_TOKEN_QUOTA_SQL, True),
+    Query("corpus_summary_stats", corpus_summary_stats,
+          CORPUS_SUMMARY_SQL, True),
+    Query("corpus_card", corpus_card, CORPUS_CARD_SQL, True),
+    Query("doc_vocab_coverage", doc_vocab_coverage,
+          DOC_VOCAB_COVERAGE_SQL, True),
+    Query("doc_repetition_flags", doc_repetition_flags,
+          DOC_REPETITION_SQL, True),
+    Query("doc_span_dedup", doc_span_dedup, DOC_SPAN_DEDUP_SQL, True),
+    Query("doc_span_dedup_apply", doc_span_dedup_apply,
+          DOC_SPAN_DEDUP_APPLY_SQL, True),
+    Query("doc_decontaminate", doc_decontaminate, DOC_DECONTAMINATE_SQL, True),
+    Query("doc_decontaminate_bloom", doc_decontaminate_bloom,
+          _bloom_decontaminate_sql(), True),
+    Query("doc_holdout_split", doc_holdout_split, DOC_HOLDOUT_SPLIT_SQL, True),
+    Query("doc_decontaminate_fuzzy", doc_decontaminate_fuzzy,
+          DOC_DECONTAMINATE_FUZZY_SQL, True),
+    Query("doc_mix_epochs", doc_mix_epochs, DOC_MIX_EPOCHS_SQL, True),
+    Query("doc_pii_redact", doc_pii_redact, DOC_PII_REDACT_SQL, True),
+    Query("doc_blocklist", doc_blocklist, BLOCKLIST_SQL, True),
+    Query("doc_url_dedup", doc_url_dedup, DOC_URL_DEDUP_SQL, True),
+    Query("corpus_funnel", corpus_funnel, CORPUS_FUNNEL_SQL, False),
+    Query("doc_token_bpe", doc_token_bpe, BPE_SQL, True),
+    Query("doc_winnow_fingerprints", doc_winnow_fingerprints,
+          WINNOW_SQL, True),
+    Query("doc_shuffle_shards", doc_shuffle_shards, SHUFFLE_SHARDS_SQL, True),
+    Query("doc_lm_perplexity", doc_lm_perplexity, LM_PPL_SQL, True),
+    Query("doc_lm_trigram", doc_lm_trigram, LM_TRIGRAM_SQL, True),
+    Query("doc_ppl_buckets", doc_ppl_buckets, PPL_BUCKETS_SQL, True),
+    Query("doc_pack_sequences", doc_pack_sequences, PACK_SEQUENCES_SQL, True),
+    Query("doc_quality_classifier", doc_quality_classifier,
+          NB_CLASSIFY_SQL, True),
+    Query("doc_dsir_weights", doc_dsir_weights, DSIR_WEIGHTS_SQL, True),
+    Query("doc_dsir_select", doc_dsir_select, DSIR_SELECT_SQL, True),
+    Query("semantic_dedup", semantic_dedup, SEMDEDUP_SQL, True),
+    Query("corpus_funnel_semantic", corpus_funnel_semantic,
+          _splice_semantic_funnel(CORPUS_FUNNEL_SQL), False),
+    Query("doc_classifier_topk", doc_classifier_topk, NB_TOPK_SQL, True),
+    # bpe_merges covers the BPE family in the bench; doc_bpe_tokens shares
+    # the same 12-round training loop at construction (it would re-train
+    # per timed invocation, doubling the loop cost without new signal) and
+    # stays correctness-gated via its oracle row instead
+    Query("bpe_merges", bpe_merges, BPE_MERGES_SQL, True),
+    Query("doc_bpe_tokens", doc_bpe_tokens, BPE_TOKENS_SQL, False),
+    Query("doc_pack_bpe", doc_pack_bpe, PACK_BPE_SQL, False),
+    # unigram-LM sibling: substring seed + 2 EM rounds, every job
+    # vocabulary-sized, corpus scanned once (functions/unigram.py)
+    Query("unigram_vocab", unigram_vocab, UNIGRAM_VOCAB_SQL, True),
+    Query("doc_unigram_tokens", doc_unigram_tokens, UNIGRAM_TOKENS_SQL, False),
+    Query("doc_pack_unigram", doc_pack_unigram, PACK_UNIGRAM_SQL, False),
+    Query("media_features", media_features, MEDIA_FEATURES_SQL, False),
+    Query("media_dhash", media_dhash, MEDIA_DHASH_SQL, True),
+    Query("media_dhash_near_dup", media_dhash_near_dup,
+          MEDIA_DHASH_PAIRS_SQL, True),
+    Query("media_audio_fp", media_audio_fp, MEDIA_AUDIO_FP_SQL, True),
+    Query("media_audio_near_dup", media_audio_near_dup,
+          MEDIA_AUDIO_PAIRS_SQL, True),
+    Query("warc_records_meta", warc_records_meta, WARC_RECORDS_SQL, True),
+    Query("wet_text_docs", wet_text_docs, WET_TEXT_DOCS_SQL, True),
+    Query("wat_link_edges", wat_link_edges_q, WAT_LINK_EDGES_SQL, True),
+    Query("warc_html_spans", warc_html_spans, WARC_HTML_SPANS_SQL, True),
+    Query("dedup_exact", dedup_exact_q, DEDUP_EXACT_SQL, True),
+    Query("minhash_lsh_candidates", minhash_lsh_q, MINHASH_SQL, True),
+    Query("dedup_clusters", dedup_clusters_q, DEDUP_CLUSTERS_SQL, True),
+    Query("ngram_jaccard_pairs", ngram_jaccard_q, NGRAM_JACCARD_SQL, True),
+    Query("simhash_pairs", simhash_pairs, SIMHASH_SQL, False),
+    Query("embedding_near_dup", embedding_near_dup, NEAR_DUP_SQL, True),
+    Query("spans_explode", spans_explode, SPANS_EXPLODE_SQL, True),
+    Query("ann_cosine_topk", ann_cosine_topk, ANN_SQL, True),
     # ANN approximate paths: LSH has a full DuckDB SQL reimplementation
     # (the md5 hyperplane family is engine-independent); IVF has an
     # independent numpy golden keyed by corpus fingerprint
     # (tools/gen_golden_ann.py) since k-means isn't SQL-expressible.
-    "ann_lsh_topk": ANN_LSH_SQL,
-    "ann_ivf_topk": ANN_IVF_SQL,
-    "ann_pq_topk": ANN_PQ_SQL,
-    "ann_ivfpq_topk": ANN_IVFPQ_SQL,
-    "doc_lm_perplexity": LM_PPL_SQL,
-    "doc_ppl_buckets": PPL_BUCKETS_SQL,
-    "doc_lm_trigram": LM_TRIGRAM_SQL,
-    "doc_pack_sequences": PACK_SEQUENCES_SQL,
-    "doc_quality_classifier": NB_CLASSIFY_SQL,
-    "doc_dsir_weights": DSIR_WEIGHTS_SQL,
-    "doc_dsir_select": DSIR_SELECT_SQL,
-    "bpe_merges": BPE_MERGES_SQL,
-    "unigram_vocab": UNIGRAM_VOCAB_SQL,
-    "doc_unigram_tokens": UNIGRAM_TOKENS_SQL,
-    "doc_pack_unigram": PACK_UNIGRAM_SQL,
-    "doc_bpe_tokens": BPE_TOKENS_SQL,
-    "doc_pack_bpe": PACK_BPE_SQL,
-    "doc_shuffle_shards": SHUFFLE_SHARDS_SQL,
-    "semantic_dedup": SEMDEDUP_SQL,
-    "corpus_funnel_semantic": _splice_semantic_funnel(CORPUS_FUNNEL_SQL),
-    "doc_classifier_topk": NB_TOPK_SQL,
-    "web_link_edges": WEB_LINK_EDGES_SQL,
-    "web_anchor_text": WEB_ANCHOR_TEXT_SQL,
-    "web_pagerank": WEB_PAGERANK_SQL,
-    "web_hits": WEB_HITS_SQL,
-    "html_boilerpipe_blocks": HTML_BOILERPIPE_BLOCKS_SQL,
-    "web_fetch_waves": WEB_FETCH_WAVES_SQL,
-    "web_wave_profile": WEB_WAVE_PROFILE_SQL,
-    "web_robots_rules": WEB_ROBOTS_RULES_SQL,
-    "web_robots_allowed": WEB_ROBOTS_ALLOWED_SQL,
-    "web_crawl_frontier": WEB_CRAWL_FRONTIER_SQL,
-    "web_fetch_schedule": WEB_FETCH_SCHEDULE_SQL,
-    "web_sitemap_urls": WEB_SITEMAP_URLS_SQL,
-    "doc_langid": DOC_LANGID_SQL,
-    "web_host_edges": WEB_HOST_EDGES_SQL,
-    "web_host_pagerank": WEB_HOST_PAGERANK_SQL,
-    "web_host_communities": WEB_HOST_COMMUNITIES_SQL,
-    "web_host_triangles": WEB_HOST_TRIANGLES_SQL,
-    "web_host_components": WEB_HOST_COMPONENTS_SQL,
-    "web_discovery_frontier": WEB_DISCOVERY_FRONTIER_SQL,
-    "web_redirect_resolution": WEB_REDIRECT_RESOLUTION_SQL,
-    "web_snapshot_diff": WEB_SNAPSHOT_DIFF_SQL,
-}
+    Query("ann_lsh_topk", ann_lsh_topk, ANN_LSH_SQL, False),
+    Query("ann_ivf_topk", ann_ivf_topk, ANN_IVF_SQL, False),
+    Query("ann_pq_topk", ann_pq_topk, ANN_PQ_SQL, True),
+    Query("ann_ivfpq_topk", ann_ivfpq_topk, ANN_IVFPQ_SQL, True),
+    Query("ann_recall", ann_recall, ANN_RECALL_SQL, False),
+    Query("html_main_content", html_main_content, HTML_MAIN_SQL, True),
+    # bench.py times PDF extraction in its own throughput stage
+    Query("extract_pdf_spans", extract_pdf_spans, EXTRACT_SPANS_SQL, False),
+    Query("extract_paged_spans", extract_paged_spans,
+          EXTRACT_PAGED_SQL, False),
+    Query("doc_metadata", doc_metadata_q, DOC_METADATA_SQL, False),
+    Query("unified_spans", unified_spans, UNIFIED_SPANS_SQL, False),
+    Query("render_html", render_html, RENDER_HTML_SQL, False),
+    Query("render_svg", render_svg, RENDER_SVG_SQL, False),
+    # web link-graph family: edges/anchor-text are scan-side extraction;
+    # pagerank times the 10-iteration fixed-point join loop (the corpus is
+    # the fixed fixture graph, so this measures per-iteration scheduling
+    # + join cost, the quantity that scales with iteration count)
+    Query("web_link_edges", web_link_edges, WEB_LINK_EDGES_SQL, True),
+    Query("web_anchor_text", web_anchor_text, WEB_ANCHOR_TEXT_SQL, True),
+    Query("web_pagerank", web_pagerank, WEB_PAGERANK_SQL, True),
+    # hits adds the L1-normalize half-steps (two one-row broadcast
+    # aggregates per iteration) on top of pagerank's join loop
+    Query("web_hits", web_hits, WEB_HITS_SQL, True),
+    # the declarative boilerplate classifier: regex segmentation +
+    # one window shuffle, the zero-Python HTML strip path
+    Query("html_boilerpipe_blocks", html_boilerpipe_blocks,
+          HTML_BOILERPIPE_BLOCKS_SQL, True),
+    # politeness scheduler: grouped two-phase prefix rank over the
+    # synthetic frontier (checkpoint + two bounded broadcasts)
+    Query("web_fetch_waves", web_fetch_waves, WEB_FETCH_WAVES_SQL, True),
+    # crawl-policy layer: robots parse + agent selection + longest-match
+    # decisions over the link-graph frontier, and the composed
+    # robots->waves schedule (the full WHAT+WHEN crawl gate)
+    Query("web_robots_rules", web_robots_rules, WEB_ROBOTS_RULES_SQL, False),
+    Query("web_robots_allowed", web_robots_allowed,
+          WEB_ROBOTS_ALLOWED_SQL, True),
+    Query("web_crawl_frontier", web_crawl_frontier,
+          WEB_CRAWL_FRONTIER_SQL, True),
+    # host projection + the shared fixed-point kernel on the 4-5-orders
+    # smaller domain graph, and the sitemap/graph discovery merge
+    Query("web_host_edges", web_host_edges, WEB_HOST_EDGES_SQL, False),
+    Query("web_host_pagerank", web_host_pagerank, WEB_HOST_PAGERANK_SQL, True),
+    Query("web_host_communities", web_host_communities,
+          WEB_HOST_COMMUNITIES_SQL, True),
+    Query("web_host_triangles", web_host_triangles,
+          WEB_HOST_TRIANGLES_SQL, True),
+    Query("web_host_components", web_host_components,
+          WEB_HOST_COMPONENTS_SQL, True),
+    Query("web_sitemap_urls", web_sitemap_urls, WEB_SITEMAP_URLS_SQL, False),
+    Query("web_discovery_frontier", web_discovery_frontier,
+          WEB_DISCOVERY_FRONTIER_SQL, True),
+    # delay-timed schedule (one more bounded join over the frontier) and
+    # pointer-jumping redirect resolution (log2(max_hops) self-joins)
+    Query("web_fetch_schedule", web_fetch_schedule,
+          WEB_FETCH_SCHEDULE_SQL, True),
+    Query("web_redirect_resolution", web_redirect_resolution,
+          WEB_REDIRECT_RESOLUTION_SQL, True),
+    Query("web_wave_profile", web_wave_profile, WEB_WAVE_PROFILE_SQL, True),
+    Query("web_snapshot_diff", web_snapshot_diff, WEB_SNAPSHOT_DIFF_SQL, True),
+    # scan-side language ID over documents: pure codegen, zero shuffle —
+    # times the per-row profile-scoring projection at corpus scale
+    Query("doc_langid", doc_langid, DOC_LANGID_SQL, True),
+]
+
+QUERIES = {q.name: q.fn for q in REGISTRY}
+ORACLES = {q.name: q.oracle for q in REGISTRY}
+HEADLINE = [q.name for q in REGISTRY if q.headline]
+_twice = [n for n, k in Counter(q.name for q in REGISTRY).items() if k > 1]
+if _twice:
+    raise ValueError(f"query declared twice: {_twice}")

@@ -11,7 +11,9 @@ import pytest
 from pdf_extract_spark.device import spans_to_text
 from pdf_extract_spark.extract import (
     extract_spans_by_pages,
+    extract_spans_flat_from_mem,
     extract_spans_from_mem,
+    extract_spans_page_range,
     extract_text_from_mem,
 )
 from pdf_extract_spark.fixtures import FIXTURES, corpus, fx_xobject_form
@@ -83,6 +85,19 @@ def test_multipage_by_pages_fresh_state():
     assert len(pages) == 2
     assert spans_to_text(pages[0]) == "\n\npage one"
     assert spans_to_text(pages[1]) == "\n\npage two"
+
+
+def test_by_pages_tolerates_name_in_media_box():
+    """A MediaBox entry that is not a number reads as 0 on every path:
+    the by-pages APIs share output_doc's page setup instead of raising."""
+    pdf, _ = FIXTURES["simple_tj"]()
+    bad = pdf.replace(b"/MediaBox [0 0 612 792]", b"/MediaBox [0 0 612 /FF]")
+    assert bad != pdf and len(bad) == len(pdf)  # xref offsets still hold
+    whole = extract_spans_from_mem(bad)
+    assert whole.error is None and whole.pages == 1
+    assert extract_spans_flat_from_mem(bad)[4:] == (1, None)
+    assert extract_spans_by_pages(bad) == [whole.spans]
+    assert extract_spans_page_range(bad, 1, 1) == [(1, whole.spans)]
 
 
 def test_offsets_are_char_offsets_into_plain_text():

@@ -53,6 +53,23 @@ def test_lexer_number_pair_not_ref():
     assert arr == [1, 2, 3]
 
 
+def test_lexer_long_whitespace_run_is_linear():
+    # a whitespace run before a failed reference or dict-key tail is
+    # consumed once, never re-split, so its cost is linear in its length
+    import time
+
+    t0 = time.perf_counter()
+    assert _parse(b"5" + b" " * 64 + b"junk") == 5
+    assert _parse(b"<< /A 1" + b" " * 64 + b"2 >>") == {"A": 1}
+    assert time.perf_counter() - t0 < 0.05
+
+
+def test_lexer_comment_tail_is_not_tokens():
+    assert _parse(b"5 %0 R\n") == 5
+    assert _parse(b"5 % c\n 0 % d\n R") == Ref(5, 0)
+    assert "B" not in _parse(b"<< /A 1 %/B 2\n 3 >>")
+
+
 def test_stream_parsing():
     src = b"<< /Length 5 >>\nstream\nhello\nendstream"
     obj = Lexer(src).read_object()

@@ -898,163 +898,3 @@ def test_align_captions_matches_batch_semantics_random():
         want = [(ref, pos, " ".join(caps.get(grp, [])), len(caps.get(grp, [])))
                 for grp, ref, pos in media]
         assert got == want
-
-
-def test_caption_stream_tws_batch_parity(spark, tmp_path):
-    """The transformWithStateInPandas variant (new Spark 4 API,
-    ListState buffer + event-time timers) must emit exactly the batch
-    operator's rows — same contract as the applyInPandasWithState
-    form.  Skips where protobuf (the TWS state protocol) is absent —
-    this sandbox — same legitimate-skip pattern as the Iceberg jars."""
-    import datetime
-
-    from pdf_extract_spark.streaming.captions_tws import tws_available
-
-    if not tws_available():
-        pytest.skip("google.protobuf absent: transformWithState "
-                    "protocol unavailable in this sandbox")
-
-    from pyspark.sql import functions as F
-
-    from pdf_extract_spark.operators.interleave import (
-        media_captions,
-        synth_interleaved,
-    )
-    from pdf_extract_spark.streaming.captions_tws import caption_stream_tws
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .orderBy("doc_id")
-        .limit(10)
-    )
-    spans = synth_interleaved(docs).withColumn(
-        "ts", (F.lit(1704067200) + F.col("pos")).cast("timestamp")
-    )
-    expected = sorted(
-        (str(r["doc_id"]), r["media_ref"], r["media_pos"], r["caption"],
-         r["caption_words"])
-        for r in media_captions(spans, max_words=6, min_words=0).collect()
-    )
-    flush = spark.createDataFrame(
-        [("__flush__", 0, "text", "", "", datetime.datetime(2024, 3, 1))],
-        "doc_id string, pos long, kind string, text string, "
-        "media_ref string, ts timestamp",
-    )
-    src = str(tmp_path / "tws_src")
-    spans.select(
-        F.col("doc_id").cast("string"), "pos", "kind", "text", "media_ref", "ts"
-    ).unionByName(flush).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "doc_id string, pos long, kind string, text string, "
-        "media_ref string, ts timestamp"
-    ).parquet(src)
-    out_dir, ckpt = str(tmp_path / "tws_pairs"), str(tmp_path / "tws_ckpt")
-    q = (
-        caption_stream_tws(stream, gap_seconds=60, min_words=0,
-                           watermark="1 minute")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    got = sorted(
-        (r["doc_id"], r["media_ref"], r["media_pos"], r["caption"],
-         r["caption_words"])
-        for r in spark.read.parquet(out_dir).collect()
-        if r["doc_id"] != "__flush__"
-    )
-    assert got == expected
-
-
-class _FakeListState:
-    def __init__(self):
-        self.rows = []
-
-    def appendList(self, rows):
-        self.rows.extend(rows)
-
-    def get(self):
-        return iter(self.rows)
-
-    def clear(self):
-        self.rows = []
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeTwsHandle:
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, _FakeListState())
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def listTimers(self):
-        return list(self.timers)
-
-    def deleteTimer(self, t):
-        self.timers.remove(t)
-
-    def registerTimer(self, t):
-        self.timers.append(t)
-
-
-def test_tws_processor_logic_with_fake_handle():
-    """The TWS processor's buffering, timer-sliding, and timer-close
-    emission — unit-tested through fake state handles since the
-    protobuf state protocol is absent in this sandbox (the stream-level
-    parity test skips; the applyInPandasWithState twin covers the live
-    path)."""
-    import pandas as pd
-
-    from pdf_extract_spark.streaming.captions_tws import (
-        CaptionAlignerProcessor,
-    )
-
-    p = CaptionAlignerProcessor(gap_seconds=60, max_words=2)
-    h = _FakeTwsHandle()
-    p.init(h)
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    b1 = pd.DataFrame(
-        {"pos": [2, 3], "kind": ["text", "text"], "text": ["big", "cat"],
-         "media_ref": ["", ""], "ts": [base] * 2}
-    )
-    assert list(p.handleInputRows(("7",), iter([b1]), None)) == []
-    t0 = h.timers[0]
-    b2 = pd.DataFrame(
-        {"pos": [0, 1], "kind": ["text", "media"], "text": ["pre", ""],
-         "media_ref": ["", "img-7-0"],
-         "ts": [base + pd.Timedelta(seconds=30)] * 2}
-    )
-    assert list(p.handleInputRows(("7",), iter([b2]), None)) == []
-    # the close-timer slid forward and the stale one was deleted
-    assert len(h.timers) == 1 and h.timers[0] == t0 + 30_000
-    out = list(p.handleExpiredTimer(("7",), None, None))
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (row["doc_id"], row["media_ref"], row["media_pos"]) == ("7", "img-7-0", 1)
-    assert row["caption"] == "big cat" and row["caption_words"] == 2
-    # state cleared after emission
-    assert h.states["spans"].rows == [] and not h.states["last"].exists()

@@ -382,8 +382,9 @@ def test_resolve_href_protocol_relative(spark):
 
 
 def test_resolve_href_schemeless_base_nulls(spark):
-    """ADVICE r6: a protocol-relative href against a malformed schemeless
-    base must NULL out (and be dropped), not emit '://host/path'."""
+    """A protocol-relative or root-relative href against a malformed
+    schemeless base must NULL out (and be dropped), not emit
+    '://host/path' or a bare '/rel' edge."""
     from pyspark.sql import functions as F
 
     from pdf_extract_spark.operators.webgraph import resolve_href
@@ -402,3 +403,4 @@ def test_resolve_href_schemeless_base_nulls(spark):
     ]
     assert got[0] is None
     assert got[1] == "https://b.example/x"
+    assert got[2] is None
