@@ -405,12 +405,10 @@ class SimpleFont:
         w = self.widths
         mwid = self.missing_width
         self._width_table = [w.get(c, mwid) for c in range(256)]
-        # vectorized fast path: width vector (pre-divided by 1000) and a
+        # string-level fast path: width list (pre-divided by 1000) and a
         # str.translate map; disabled when any code would raise (None
         # entry) or when get_width has raise semantics (Type3 override)
-        import numpy as np
-
-        self._np_w1000 = np.asarray(self._width_table, dtype=np.float64) / 1000.0
+        self._w1000 = [x / 1000.0 for x in self._width_table]
         if all(x is not None for x in dc) and type(self).get_width is SimpleFont.get_width:
             self._trans = {c: dc[c] for c in range(256)}
         else:

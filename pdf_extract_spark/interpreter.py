@@ -296,16 +296,12 @@ class Processor:
             # heuristics and only the LAST char's end feeds the next ones
             # (lib.rs:2161-2190), so per-char work collapses to a width
             # gather + one str.translate.  Typical shown strings are a few
-            # chars (one word per Tj/TJ element): below ~32 chars a plain
-            # Python loop over a width LIST beats the numpy path's
-            # frombuffer/full/fancy-index fixed overhead ~3x.
-            w_list = getattr(font, "_py_w1000", None)
-            if w_list is None:
-                w_list = font._np_w1000.tolist()
-                font._py_w1000 = w_list
-            # closed form — no per-char Python loop and no numpy fixed
-            # overhead: total advance = h*(sum(w)*fs + cs*n + ws*#spaces),
-            # with sum/map/count all C-level primitives
+            # chars (one word per Tj/TJ element), so the gather runs over a
+            # plain width list rather than an array.
+            w_list = font._w1000
+            # closed form — no per-char Python loop: total advance =
+            # h*(sum(w)*fs + cs*n + ws*#spaces), with sum/map/count all
+            # C-level primitives
             last_code = s[-1]
             last_w0 = w_list[last_code]
             sum_w = sum(map(w_list.__getitem__, s))

@@ -2,8 +2,7 @@
 
 Spark-first design (SURVEY.md §3 "Our lifecycle"):
 
-    raw_docs --salt-repartition--> mapInArrow(extract_batch) --> spans+metrics
-        \\--(byte_len > giant_threshold)--> one-doc-per-task path --/
+    raw_docs --repartition(doc_id)--> mapInArrow(extract_batch) --> spans+metrics
 
   * The reference processes one document at a time, single-threaded
     (/root/reference/src/lib.rs:2374-2416); extraction is embarrassingly
@@ -12,12 +11,10 @@ Spark-first design (SURVEY.md §3 "Our lifecycle"):
     level (per BASELINE.json input_hint; pandas adds only object-dtype
     overhead for a bytes->flat-lists kernel, so the raw-Arrow variant of
     mapInPandas is used for the hot path).
-  * Skew: doc sizes span ~10^6x in web corpora.  Hash-salting spreads doc
-    COUNT evenly but a partition can still draw several giant PDFs, so
-    giant docs (> giant_threshold bytes) are split off and repartitioned
-    one-per-task; both paths share the same extractor and are unioned.
-    This is the explicit salting/repartition the north_rule requires — AQE
-    cannot rebalance inside a UDF stage.
+  * Skew: documents are hash-spread on doc_id over ``num_partitions``; PDF
+    bytes cross exactly one exchange.  A multi-GB document that would be
+    a straggler goes through ``extract_documents_paged``, which splits it
+    into page ranges that extract as independent tasks.
   * Resume: anti-join against the lineage table of completed doc_ids —
     table-driven checkpointing, no stateful operators needed.
   * Metrics (pages, spans, decode_failures) ride along as columns and are
@@ -51,9 +48,6 @@ EXTRACT_SCHEMA = (
     f"spans {SPANS_STRUCT_SQL}, "
     "pages int, n_spans int, decode_failures int, error string"
 )
-
-DEFAULT_GIANT_THRESHOLD = 32 * 1024 * 1024  # 32 MiB
-
 
 def _extract_batches_arrow(batches):
     """Arrow-native extraction UDF (mapInArrow): builds output columns as
@@ -112,117 +106,43 @@ def _extract_batches_arrow(batches):
 
 
 def _zip_spans(flat: DataFrame) -> DataFrame:
-    """JVM-side reassembly of the span structs from the flat UDF output."""
+    """JVM-side reassembly of the span structs from the flat UDF output:
+    the four adjacent span arrays become one ``spans`` column in place."""
+    cols = flat.columns
+    i = cols.index("kind")
     return flat.select(
-        "doc_id",
+        *cols[:i],
         F.arrays_zip("kind", "text", "media_ref", "offset")
         .cast(SPANS_STRUCT_SQL)
         .alias("spans"),
-        "pages",
-        "n_spans",
-        "decode_failures",
-        "error",
+        *cols[i + 4:],
     )
 
 
-MIN_HEAVY_CUT = 1 * 1024 * 1024  # below this, one-per-task overhead dominates
-
-
-def extract_documents(
-    raw_docs: DataFrame,
-    num_partitions: int | None = None,
-    giant_threshold: int | None = None,
-    heavy_quantile: float | None = 0.98,
-) -> DataFrame:
-    """raw_docs(doc_id, content[, byte_len]) -> extraction result frame.
+def extract_documents(raw_docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """raw_docs(doc_id, content, ...) -> extraction result frame.
 
     Returns doc_id, spans, pages, n_spans, decode_failures, error.
 
-    Skew strategy (extraction cost ~ byte_len, and web-corpus doc sizes
-    span ~10^6x) — with the constraint that PDF BYTES cross at most ONE
-    exchange per path (a content shuffle at 100 TB costs more than the
-    extraction itself):
+    The documents are hash-repartitioned on doc_id over `num_partitions`
+    (default ``spark.sql.shuffle.partitions``), so PDF bytes cross exactly
+    one exchange — at N_docs >> partitions the per-partition total
+    concentrates (Chernoff); an exact size-balanced deal would need a
+    second content shuffle, which costs more at scale than the residual
+    imbalance it removes.  Building the plan runs no Spark job.  Documents
+    large enough to be stragglers on their own (multi-GB) belong on
+    ``extract_documents_paged``, which splits them into page ranges.
 
-      * the heavy tail is cut off at ``giant_threshold`` bytes; when that
-        is None the cut is probed from the `heavy_quantile` approx-quantile
-        of ``byte_len`` (clamped to [1 MiB, 32 MiB]).  Heavy docs are
-        spread one-doc-ish per task over 4x the partitions, so a giant PDF
-        never queues behind another.  The probe runs only when the source
-        carries a ``byte_len`` column (then it is a column-pruned scan —
-        never a full-content read).
-      * the body is hash-repartitioned on doc_id over `num_partitions`.
-        With the tail removed, per-doc cost is bounded by the cut, and at
-        N_docs >> partitions the per-partition total concentrates
-        (Chernoff) — an exact per-size-class round-robin deal would need a
-        global window over content-carrying rows, i.e. a SECOND full
-        content shuffle, which costs more at scale than the residual
-        imbalance it removes.
-
-    NULL content rows ride the body path (byte_len coalesced to 0) and
-    surface as decode-failure rows rather than silently vanishing.
+    NULL content surfaces as a decode-failure row rather than vanishing.
     """
     spark = raw_docs.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    has_source_len = "byte_len" in raw_docs.columns
-    df = raw_docs
-    if not has_source_len:
-        df = df.withColumn("byte_len", F.length("content").cast("long"))
-    df = df.withColumn("byte_len", F.coalesce(F.col("byte_len"), F.lit(0)))
-
-    max_len = None
-    if giant_threshold is None:
-        giant_threshold = DEFAULT_GIANT_THRESHOLD
-        if has_source_len and heavy_quantile is not None:
-            # ONE column-pruned agg job learns the heavy cut AND the max
-            # doc size (the old separate approxQuantile RDD call cost a
-            # noticeably slower probe job; percentile_approx rides the
-            # same narrow scan as max)
-            try:
-                row = df.agg(
-                    F.percentile_approx(
-                        F.col("byte_len"), float(heavy_quantile), F.lit(1000)
-                    ).alias("q"),
-                    F.max("byte_len").alias("mx"),
-                ).first()
-            except Exception:
-                row = None
-            if row is not None and row["q"] is not None:
-                giant_threshold = int(
-                    min(DEFAULT_GIANT_THRESHOLD, max(row["q"], MIN_HEAVY_CUT))
-                )
-                max_len = row["mx"]
-
-    if max_len is not None and max_len <= giant_threshold:
-        # Scale-adaptive plan shape: the probe PROVED the giant frame is
-        # empty, so the two-branch skew plan (second scan + 4x-partition
-        # repartition + union) would be pure overhead — a single
-        # hash-spread path produces the identical rows.  A corpus that
-        # does carry a heavy tail takes the two-path plan below, same as
-        # before.  (Measured: the empty giant branch alone cost ~0.9 s
-        # per run at bench scale.)
-        return _zip_spans(
-            df.select("doc_id", "content")
-            .repartition(num_partitions, F.col("doc_id"))
-            .mapInArrow(_extract_batches_arrow, _FLAT_SCHEMA)
-        )
-
-    normal = df.filter(F.col("byte_len") <= giant_threshold)
-    giant = df.filter(F.col("byte_len") > giant_threshold)
-
-    normal_out = _zip_spans(
-        normal.select("doc_id", "content")
+    return _zip_spans(
+        raw_docs.select("doc_id", "content")
         .repartition(num_partitions, F.col("doc_id"))
         .mapInArrow(_extract_batches_arrow, _FLAT_SCHEMA)
     )
-    # Heavy path: one-doc-ish per task over 4x partitions so a giant PDF
-    # never shares a task's memory or wave slot with others.
-    giant_out = _zip_spans(
-        giant.select("doc_id", "content")
-        .repartition(4 * num_partitions, F.col("doc_id"))
-        .mapInArrow(_extract_batches_arrow, _FLAT_SCHEMA)
-    )
-    return normal_out.unionByName(giant_out)
 
 
 PAGE_FLAT_SCHEMA = (
@@ -328,13 +248,7 @@ def extract_documents_paged(
         ranges.repartition(num_partitions, F.xxhash64("doc_id", "lo"))
         .mapInArrow(extract_ranges, PAGE_FLAT_SCHEMA)
     )
-    return flat.select(
-        "doc_id",
-        "page_num",
-        F.arrays_zip("kind", "text", "media_ref", "offset")
-        .cast(SPANS_STRUCT_SQL)
-        .alias("spans"),
-    )
+    return _zip_spans(flat)
 
 
 def reassemble_doc_spans(paged: DataFrame) -> DataFrame:

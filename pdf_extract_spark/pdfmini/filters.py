@@ -17,12 +17,9 @@ import zlib
 
 
 def flate_decode(data: bytes, params: dict | None = None) -> bytes:
-    try:
-        out = zlib.decompress(data)
-    except zlib.error:
-        # tolerate truncated streams the way most readers do
-        d = zlib.decompressobj()
-        out = d.decompress(data)
+    # a decompressobj tolerates truncated streams and trailing junk the way
+    # most readers do, and gives zlib.decompress's bytes on a complete one
+    out = zlib.decompressobj().decompress(data)
     return apply_predictor(out, params)
 
 

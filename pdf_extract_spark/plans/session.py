@@ -4,7 +4,7 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
   * Arrow batches are capped small — rows carry whole PDFs (MB-scale), so
     the default 10k records/batch would make multi-GB batches.
   * AQE on: runtime coalescing + skew splitting complement our explicit
-    doc-size salting (BASELINE.json north_rule demands explicit handling;
+    doc_id repartition (BASELINE.json north_rule demands explicit handling;
     AQE alone only fixes join/agg skew, not UDF-stage skew).
   * shuffle.partitions default sized to cores for local mode; a real
     cluster job overrides via spark-submit --conf.

@@ -22,6 +22,7 @@ rows-only checks remain.
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 from typing import Callable, NamedTuple
 
@@ -53,8 +54,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same table the same plan instance, which breaks self-joins with
     ambiguous-column errors), and every action still scans the parquet
     files — metadata reuse, not result caching.  Keyed on the session
-    object (a fresh session gets a fresh memo)."""
+    object (a fresh session gets a fresh memo) and on the path's mtime, so
+    a rewritten table is re-inferred; a path `os.stat` cannot see (not on
+    the local file system) is read without the memo."""
     path = f"{sf_dir}/{name}.parquet"
+    try:
+        key = (path, os.stat(path).st_mtime_ns)
+    except OSError:
+        return spark.read.parquet(path)
     memo = getattr(spark, "_pes_schema_memo", None)
     if memo is None:
         memo = {}
@@ -62,10 +69,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark._pes_schema_memo = memo
         except AttributeError:  # exotic session proxy: fall through uncached
             return spark.read.parquet(path)
-    schema = memo.get(path)
+    schema = memo.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        memo[path] = df.schema
+        memo[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
 
@@ -2942,13 +2949,12 @@ ORDER BY doc_id, fp
 # expected text (tools/gen_golden_spans.py), committed as a parquet so
 # DuckDB can serve it side-by-side with the Spark run — converting the
 # flagship query from rows-only to a full rows+schema+hash check.
-import os as _os
 
 
 def _golden(name: str) -> str:
     """Absolute path of a committed golden-oracle parquet under dist/."""
-    return _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+    return os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "dist",
         name,
     )

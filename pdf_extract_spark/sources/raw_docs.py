@@ -90,7 +90,7 @@ def synthetic_corpus_df(
     manifest, bytes fetched executor-side).
 
     Composition: `pct_large` multi-page docs with page counts cycling
-    10/20/30/40/80 (deliberate skew for the salting path), remainder
+    10/20/30/40/80 (deliberate size skew for the extraction stage), remainder
     cycling the 16 small fixture families.  Same id -> same bytes, always.
     """
     if num_partitions is None:

@@ -19,7 +19,13 @@ from pdf_extract_spark.pdfmini.filters import (
 
 def test_flate_roundtrip():
     data = b"BT (hello) Tj ET" * 10
-    assert flate_decode(zlib.compress(data)) == data
+    z = zlib.compress(data)
+    assert flate_decode(z) == data
+    # trailing junk after the end of the stream is ignored
+    assert flate_decode(z + b"\r\nendstream junk") == data
+    # a truncated stream yields the prefix it does hold
+    cut = flate_decode(z[: len(z) // 2])
+    assert cut and data.startswith(cut)
 
 
 def test_asciihex():

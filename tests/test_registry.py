@@ -1,6 +1,7 @@
 """Registry contract: every query is declared once with a callable and a
 non-empty oracle, bench.py's headline set is pinned to its recorded
-order, and the entry module exposes the three required functions."""
+order, the entry module exposes the three required functions, and the
+shared table reader sees a rewritten table."""
 
 import hashlib
 
@@ -33,3 +34,22 @@ def test_entry_module_surface():
     o = e.oracle_sql()
     assert set(q) == set(o) and len(q) >= 88
     assert callable(e.entry)
+
+
+def test_load_memo_sees_rewritten_table(spark, tmp_path):
+    # the schema memo must not outlive a rewrite of the file it describes
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_extract_spark.queries import load
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1]}), path)
+    assert load(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1], "b": [2]}), path)
+    # step the mtime past a coarse file-system clock tick
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert load(spark, str(tmp_path), "t").columns == ["a", "b"]

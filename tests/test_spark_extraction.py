@@ -55,14 +55,6 @@ def test_extract_reducer_text_parity(spark):
         assert texts[doc_id] == expected, doc_id
 
 
-def test_giant_path_and_union(spark):
-    raw = fixture_corpus_df(spark, replicas=1)
-    # force some docs down the giant path with a tiny threshold
-    out = extract_documents(raw, num_partitions=4, giant_threshold=900)
-    assert out.count() == raw.count()
-    assert out.filter(F.col("error").isNotNull()).count() == 0
-
-
 def test_resume_anti_join(spark):
     raw = fixture_corpus_df(spark, replicas=1)
     out = extract_documents(raw, num_partitions=4)
@@ -98,48 +90,43 @@ def test_corrupt_doc_is_metric_not_failure(spark):
 
 def test_null_content_surfaces_as_failure_row(spark):
     """NULL content (and NULL byte_len) must not vanish — it must come out
-    as a decode-failure row (ADVICE r1: NULL byte_len made both path
-    filters NULL and the row disappeared)."""
-    rows = [("null-1", None, None, "junk"), ("ok-1", b"", 0, "junk")]
+    as a decode-failure row; a large declared byte_len still yields
+    exactly one row."""
+    rows = [
+        ("null-1", None, None, "junk"),
+        ("ok-1", b"", 0, "junk"),
+        ("big-1", b"%PDF-1.4", 8 * 1024 * 1024, "junk"),
+    ]
     raw = spark.createDataFrame(
         rows, "doc_id string, content binary, byte_len long, source string"
     )
     out = extract_documents(raw, num_partitions=2).cache()
-    assert out.count() == 2
+    assert out.count() == 3
     got = {r["doc_id"] for r in out.select("doc_id").collect()}
-    assert got == {"null-1", "ok-1"}
-    assert out.filter(F.col("decode_failures") == 1).count() == 2
+    assert got == {"null-1", "ok-1", "big-1"}
+    assert out.filter(F.col("decode_failures") == 1).count() == 3
 
 
 def test_single_content_exchange_per_path(spark):
-    """Plan-quality gate (VERDICT r1 #4): PDF bytes cross at most ONE
-    Exchange before reaching the extraction UDF, on both the body and the
-    heavy path."""
+    """Plan-quality gate (VERDICT r1 #4): one plan whose PDF bytes cross
+    at most ONE Exchange before the extraction UDF, and building it runs
+    no Spark job — not even on a source that carries byte_len."""
     raw = fixture_corpus_df(spark, replicas=1)
-    out = extract_documents(raw, num_partitions=4, giant_threshold=900)
+    assert "byte_len" in raw.columns
+    sc = spark.sparkContext
+    group = "extract-documents-plan"
+    sc.setJobGroup(group, "extract_documents call")
+    try:
+        out = extract_documents(raw, num_partitions=4)
+        submitted = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert submitted == [], submitted
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # each mapInPandas (one per path) may have at most one Exchange below it;
-    # the union itself adds none.  Count globally: 2 paths -> <= 2 exchanges.
+    assert plan.count("MapInArrow") == 1, plan[:1500]
     n_exchange = plan.count("Exchange")
-    n_udf = plan.count("MapInArrow") + plan.count("MapInPandas")
-    assert n_udf == 2, plan[:1500]
-    assert n_exchange <= 2, f"{n_exchange} exchanges in plan:\n{plan[:2000]}"
-
-
-def test_heavy_quantile_probe(spark):
-    """With giant_threshold=None and a byte_len source column, the split
-    point is probed from the size distribution (clamped to >= 1 MiB)."""
-    import pdf_extract_spark.operators.extraction as ex
-
-    rows = [(f"d-{i}", b"%PDF-1.4", 8, "x") for i in range(50)]
-    rows.append(("big-1", b"%PDF-1.4", 8 * 1024 * 1024, "x"))
-    raw = spark.createDataFrame(
-        rows, "doc_id string, content binary, byte_len long, source string"
-    )
-    out = extract_documents(raw, num_partitions=2, heavy_quantile=0.9)
-    # all rows survive regardless of which path they take
-    assert out.count() == 51
-    assert ex.MIN_HEAVY_CUT == 1024 * 1024
+    assert n_exchange <= 1, f"{n_exchange} exchanges in plan:\n{plan[:2000]}"
 
 
 def test_spans_sink_bucketed(spark, tmp_path):
