@@ -70,33 +70,17 @@ class PlainTextSpanDevice:
         pass  # no-op in plain text (lib.rs:2195-2199)
 
     def output_character(self, trm, width: float, _spacing: float, font_size: float, char: str):
-        # scalar expansion of mat_mul(trm, flip_ctm) with
-        # flip_ctm = (1,0,0,-1,0,H): position = (e, H - f); the tfs vector
-        # uses trm's linear part only (transform_vector semantics)
-        a, b, c, d, e, f = trm
-        vx = font_size * (a + c)
-        vy = font_size * (b + d)
-        prod = vx * vy
-        tfs = math.sqrt(prod) if prod >= 0 else math.nan
-        x = e
-        y = self._flip_h - f
-        if self.first_char:
-            if abs(y - self.last_y) > tfs * 1.5:
-                self._newline()
-            if x < self.last_end and abs(y - self.last_y) > tfs * 0.5:
-                self._newline()
-            if x > self.last_end + tfs * 0.1:
-                self._write(" ")
-        self._write(char)
-        self.first_char = False
-        self.last_y = y
-        self.last_end = x + width * tfs
+        self.output_string(trm, char, width, font_size, 0.0, 0.0)
 
     def output_string(self, trm, text: str, last_w0: float, font_size: float,
                       dx_last: float, dy_last: float):
-        """String-level fast path: equivalent to output_character over every
-        char of a shown string — heuristics fire on the first char only
-        (begin_word gate), last_end/last_y take the LAST char's position."""
+        """One shown string: the heuristics fire on its first char only
+        (begin_word gate), last_end/last_y take its LAST char's position
+        (dx_last/dy_last from the first, advance last_w0).
+        output_character is the one-char case."""
+        # scalar expansion of mat_mul(trm, flip_ctm) with
+        # flip_ctm = (1,0,0,-1,0,H): position = (e, H - f); the tfs vector
+        # uses trm's linear part only (transform_vector semantics)
         a, b, c, d, e, f = trm
         vx = font_size * (a + c)
         vy = font_size * (b + d)

@@ -15,7 +15,9 @@ From-scratch Python implementation of the reference's font semantics:
     (lib.rs:1026-1028 reads w[i] for first/last/width, so range entries
     are silently dropped) is replicated.
   * ToUnicode CMap parsing        (lib.rs:920-968) — bfchar/bfrange,
-    UTF-16BE values, lone-surrogate entries skipped.
+    UTF-16BE values, lone-surrogate entries skipped.  CMaps are read with
+    the content-stream tokenizer (pdfmini.content.decode_content), and
+    bfrange expansion is bounded (MAX_BFRANGE_CODES).
   * decode_char chains            (lib.rs:826-848, 876-898, 1081-1089) —
     incl. the CID silent-empty-string fallback.
 """
@@ -31,61 +33,46 @@ from .encodings_data import (
     to_utf8,
     zapfdigbats_names_to_unicode,
 )
+from .pdfmini.content import decode_content
 from .pdfmini.objects import Name, PdfString, Stream
 
 # --------------------------------------------------------------------------
-# CMap parsing (replaces the adobe-cmap-parser crate)
+# CMap parsing (replaces the adobe-cmap-parser crate).  A CMap is a postfix
+# program, so it is read with the content-stream tokenizer: a section's body
+# is the operand list flushed by the operator after its begin<section>.
 # --------------------------------------------------------------------------
 
+# Bound on the codes all bfranges of one CMap may expand to: twice the 2-byte
+# code space.  A 1-byte destination is never incremented, so a ~60-byte
+# `<00000000> <FFFFFFFF> <41>` range would otherwise build 2^32 entries.
+MAX_BFRANGE_CODES = 131072
 
-def _cmap_tokens(data: bytes):
-    """Tokenize a CMap stream: hex strings, numbers, names, keywords, arrays."""
-    i, n = 0, len(data)
-    while i < n:
-        b = data[i]
-        if b in b"\x00\t\n\x0c\r ":
-            i += 1
-            continue
-        if b == 0x25:  # comment
-            while i < n and data[i] not in b"\r\n":
-                i += 1
-            continue
-        if b == 0x3C:  # hex string
-            j = data.find(b">", i + 1)
-            if j == -1:
-                j = n
-            hx = bytes(c for c in data[i + 1 : j] if chr(c) in "0123456789abcdefABCDEF")
-            if len(hx) % 2:
-                hx += b"0"
-            yield ("hex", bytes.fromhex(hx.decode("ascii")))
-            i = j + 1
-            continue
-        if b == 0x5B:
-            yield ("[", None)
-            i += 1
-            continue
-        if b == 0x5D:
-            yield ("]", None)
-            i += 1
-            continue
-        if b == 0x2F:  # name
-            j = i + 1
-            while j < n and data[j] not in b"\x00\t\n\x0c\r ()<>[]{}/%":
-                j += 1
-            yield ("name", data[i + 1 : j].decode("latin-1"))
-            i = j
-            continue
-        j = i
-        while j < n and data[j] not in b"\x00\t\n\x0c\r ()<>[]{}/%":
-            j += 1
-        word = data[i:j].decode("latin-1")
-        i = j if j > i else i + 1
-        if not word:
-            continue
-        try:
-            yield ("num", int(word))
-        except ValueError:
-            yield ("kw", word)
+
+def _cmap_sections(data: bytes):
+    """(section, body) per `begin<section>` keyword.  The body is flushed by
+    the next operator: `end<section>`, or whatever follows if it is missing."""
+    ops = decode_content(data)
+    for (op, _), (_, body) in zip(ops, ops[1:]):
+        if op.startswith("begin"):
+            yield op[5:], body
+
+
+def _entries(body: list, width: int, keys: int):
+    """Consecutive `width`-tuples of a section body, up to the first whose
+    leading `keys` items are not strings."""
+    for i in range(0, len(body) - width + 1, width):
+        entry = body[i : i + width]
+        if not all(isinstance(x, PdfString) for x in entry[:keys]):
+            return
+        yield entry
+
+
+def _code(s: bytes) -> int:
+    return int.from_bytes(s, "big")
+
+
+def _cid(d) -> int:
+    return d if type(d) is int else 0  # not bool, not float
 
 
 def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
@@ -94,45 +81,31 @@ def parse_tounicode_cmap(data: bytes) -> dict[int, str]:
     Values are UTF-16BE; entries that are a single lone surrogate are
     skipped, mirroring lib.rs:942-948."""
     raw: dict[int, bytes] = {}
-    toks = list(_cmap_tokens(data))
-    i = 0
-    while i < len(toks):
-        kind, val = toks[i]
-        if kind == "kw" and val == "beginbfchar":
-            i += 1
-            while i + 1 < len(toks) and toks[i][0] == "hex":
-                src = int.from_bytes(toks[i][1], "big")
-                if toks[i + 1][0] == "hex":
-                    raw[src] = toks[i + 1][1]
-                i += 2
-        elif kind == "kw" and val == "beginbfrange":
-            i += 1
-            while i + 2 < len(toks) and toks[i][0] == "hex" and toks[i + 1][0] == "hex":
-                lo = int.from_bytes(toks[i][1], "big")
-                hi = int.from_bytes(toks[i + 1][1], "big")
-                dst = toks[i + 2]
-                if dst[0] == "hex":
-                    base = bytearray(dst[1])
+    expanded = 0
+    for section, body in _cmap_sections(data):
+        if section == "bfchar":
+            for src, dst in _entries(body, 2, 1):
+                if isinstance(dst, PdfString):
+                    raw[_code(src)] = dst
+        elif section == "bfrange":
+            for lo, hi, dst in _entries(body, 3, 2):
+                lo, hi = _code(lo), _code(hi)
+                if isinstance(dst, PdfString):
+                    # the last two bytes count up; a 1-byte value repeats
+                    head, tail = dst[:-2], _code(dst[-2:])
                     for k in range(hi - lo + 1):
-                        v = bytearray(base)
-                        if len(v) >= 2:
-                            tail = int.from_bytes(v[-2:], "big") + k
-                            v[-2:] = tail.to_bytes(2, "big")
-                        raw[lo + k] = bytes(v)
-                    i += 3
-                elif dst[0] == "[":
-                    i += 3
-                    k = 0
-                    while i < len(toks) and toks[i][0] != "]":
-                        if toks[i][0] == "hex":
-                            raw[lo + k] = toks[i][1]
-                        k += 1
-                        i += 1
-                    i += 1
-                else:
-                    i += 3
-        else:
-            i += 1
+                        expanded += 1
+                        if expanded > MAX_BFRANGE_CODES:
+                            raise ValueError(
+                                f"bfranges expand past {MAX_BFRANGE_CODES} codes"
+                            )
+                        raw[lo + k] = (
+                            head + (tail + k).to_bytes(2, "big") if len(dst) >= 2 else dst
+                        )
+                elif isinstance(dst, list):
+                    for k, d in enumerate(dst):
+                        if isinstance(d, PdfString):
+                            raw[lo + k] = d
     out: dict[int, str] = {}
     for k, v in raw.items():
         if len(v) % 2:
@@ -152,35 +125,13 @@ def parse_byte_mapping(data: bytes):
     (replaces adobe_cmap_parser::get_byte_mapping, used at lib.rs:992)."""
     codespace: list[tuple[int, int, int]] = []  # (width, start, end)
     cids: list[tuple[int, int, int]] = []  # (src_lo, src_hi, dst_lo)
-    toks = list(_cmap_tokens(data))
-    i = 0
-    while i < len(toks):
-        kind, val = toks[i]
-        if kind == "kw" and val == "begincodespacerange":
-            i += 1
-            while i + 1 < len(toks) and toks[i][0] == "hex":
-                lo_b, hi_b = toks[i][1], toks[i + 1][1]
-                codespace.append(
-                    (len(lo_b), int.from_bytes(lo_b, "big"), int.from_bytes(hi_b, "big"))
-                )
-                i += 2
-        elif kind == "kw" and val == "begincidrange":
-            i += 1
-            while i + 2 < len(toks) and toks[i][0] == "hex":
-                lo = int.from_bytes(toks[i][1], "big")
-                hi = int.from_bytes(toks[i + 1][1], "big")
-                dst = toks[i + 2][1] if toks[i + 2][0] == "num" else 0
-                cids.append((lo, hi, dst))
-                i += 3
-        elif kind == "kw" and val == "begincidchar":
-            i += 1
-            while i + 1 < len(toks) and toks[i][0] == "hex":
-                src = int.from_bytes(toks[i][1], "big")
-                dst = toks[i + 1][1] if toks[i + 1][0] == "num" else 0
-                cids.append((src, src, dst))
-                i += 2
-        else:
-            i += 1
+    for section, body in _cmap_sections(data):
+        if section == "codespacerange":
+            codespace += [(len(lo), _code(lo), _code(hi)) for lo, hi in _entries(body, 2, 2)]
+        elif section == "cidrange":
+            cids += [(_code(lo), _code(hi), _cid(d)) for lo, hi, d in _entries(body, 3, 2)]
+        elif section == "cidchar":
+            cids += [(_code(s), _code(s), _cid(d)) for s, d in _entries(body, 2, 1)]
     if not codespace:
         codespace = [(2, 0, 0xFFFF)]
     return codespace, cids

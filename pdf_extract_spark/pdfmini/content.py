@@ -25,7 +25,10 @@ from .objects import (
     DELIMITERS,
     WHITESPACE,
     Lexer,
+    Name,
     PdfString,
+    _to_number,  # Lexer.read_number's exact number semantics
+    _unescape_name,
 )
 
 _TOKEN = re.compile(
@@ -43,14 +46,7 @@ _TOKEN = re.compile(
 )
 
 
-# number parsing shares Lexer.read_number's exact semantics (whole regular
-# token; '.'-bearing -> float, else int -> float -> 0) via the same helper
-from .objects import _to_number  # noqa: E402
-
-
 def decode_content(data: bytes) -> list[tuple[str, list]]:
-    from .objects import Name
-
     ops: list[tuple[str, list]] = []
     operands: list = []
     sink = operands  # current operand sink: operands or the open array
@@ -70,19 +66,7 @@ def decode_content(data: bytes) -> list[tuple[str, list]]:
         if g == "name":
             raw = m.group("name")
             if b"#" in raw:
-                out = bytearray()
-                i = 0
-                while i < len(raw):
-                    if raw[i] == 0x23 and i + 2 < len(raw):
-                        try:
-                            out.append(int(raw[i + 1 : i + 3], 16))
-                            i += 3
-                            continue
-                        except ValueError:
-                            pass  # malformed #-escape: keep the literal '#'
-                    out.append(raw[i])
-                    i += 1
-                raw = bytes(out)
+                raw = _unescape_name(raw)
             sink.append(Name(raw.decode("latin-1")))
             continue
         if g == "open":

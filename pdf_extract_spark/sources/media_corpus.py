@@ -155,66 +155,13 @@ def make_bmp(w: int, h: int, value: int) -> bytes:
 
 
 def make_png(w: int, h: int, color_type: int = 0) -> bytes:
-    """Spec-correct PNG encoder (RFC 2083): 8-bit depth, non-interlaced,
-    row y filtered with type y % 5 so decoding exercises None/Sub/Up/
-    Average/Paeth.  Pixels come from png_pixel — the golden derives
-    features from that formula, never from the decoder."""
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    nch = {0: 1, 2: 3, 6: 4}[color_type]
-
-    def px(x: int, y: int) -> tuple:
-        v = png_pixel(x, y)
-        if color_type == 0:
-            return (v,)
-        if color_type == 2:
-            return (v, v, v)
-        return (v, v, v, 255)
-
-    raw = bytearray()
-    prev = [0] * (w * nch)
-    for y in range(h):
-        row = [c for x in range(w) for c in px(x, y)]
-        ft = y % 5
-        raw.append(ft)
-        if ft == 0:
-            filt = row
-        elif ft == 1:  # Sub
-            filt = [
-                (row[i] - (row[i - nch] if i >= nch else 0)) & 255
-                for i in range(len(row))
-            ]
-        elif ft == 2:  # Up
-            filt = [(row[i] - prev[i]) & 255 for i in range(len(row))]
-        elif ft == 3:  # Average
-            filt = [
-                (row[i] - (((row[i - nch] if i >= nch else 0) + prev[i]) >> 1)) & 255
-                for i in range(len(row))
-            ]
-        else:  # Paeth
-            filt = []
-            for i in range(len(row)):
-                a = row[i - nch] if i >= nch else 0
-                b = prev[i]
-                c = prev[i - nch] if i >= nch else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pr = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                filt.append((row[i] - pr) & 255)
-        raw += bytes(filt)
-        prev = row
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    """Spec-correct PNG (RFC 2083) of the png_pixel formula: 8-bit depth,
+    non-interlaced, row y filtered with type y % 5 so decoding exercises
+    None/Sub/Up/Average/Paeth.  The golden derives features from that
+    formula, never from the decoder."""
+    px = {0: lambda v: (v,), 2: lambda v: (v, v, v), 6: lambda v: (v, v, v, 255)}[color_type]
+    return make_png_raw(
+        [[px(png_pixel(x, y)) for x in range(w)] for y in range(h)], color_type
     )
 
 
