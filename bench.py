@@ -1,15 +1,13 @@
 """Benchmark harness: runs the headline queries + the extraction pipeline
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] and prints two JSON lines: the full record,
+then a compact summary
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 value = total wall time over the headline set (lower is better).
 The extraction benchmark replicates the deterministic fixture corpus so
 that extraction work scales with sf (sf0.1 -> ~4800 docs).
-
-Scaling-efficiency evidence (local[8] vs local[32]) is produced separately
-by tools/bench_scaling.py and reported in BASELINE.md.
 """
 
 from __future__ import annotations

@@ -149,11 +149,15 @@ class PlainTextSpanDevice:
 
     def finish(self) -> list[dict]:
         """Dict view of finish_flat() — the library-facing span API."""
-        kinds, texts, media_refs, offsets = self.finish_flat()
-        return [
-            {"kind": k, "text": t, "media_ref": m, "offset": o}
-            for k, t, m, o in zip(kinds, texts, media_refs, offsets)
-        ]
+        return span_dicts(*self.finish_flat())
+
+
+def span_dicts(kinds, texts, media_refs, offsets) -> list[dict]:
+    """The four flat span lists as span dicts, in order."""
+    return [
+        {"kind": k, "text": t, "media_ref": m, "offset": o}
+        for k, t, m, o in zip(kinds, texts, media_refs, offsets)
+    ]
 
 
 def spans_to_text(spans: list[dict]) -> str:

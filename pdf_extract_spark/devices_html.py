@@ -43,8 +43,13 @@ def insert_nbsp(s: str) -> str:
 
 
 def _fmt(v: float) -> str:
-    """Rust's {} Display for f64 prints integral values without '.0'."""
-    if v == int(v) and abs(v) < 1e15 and not math.isnan(v) and not math.isinf(v):
+    """Rust's {} Display for f64 prints integral values without '.0' and
+    non-finite ones as NaN, inf and -inf (rotated text has a NaN size)."""
+    if math.isnan(v):
+        return "NaN"
+    if math.isinf(v):
+        return "inf" if v > 0 else "-inf"
+    if v == int(v) and abs(v) < 1e15:
         return str(int(v))
     return repr(v)
 

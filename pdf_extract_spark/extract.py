@@ -8,7 +8,7 @@ via --py-files and invoked inside Arrow batches.
 
 from __future__ import annotations
 
-from .device import PlainTextSpanDevice, spans_to_text
+from .device import PlainTextSpanDevice, span_dicts, spans_to_text
 from .interpreter import Processor, output_doc, output_page
 from .pdfmini.document import Document, EncryptedPdfError, PdfError, load_mem
 
@@ -31,23 +31,18 @@ class ExtractResult:
         self.error = error
 
 
-def extract_spans_from_mem(data: bytes) -> ExtractResult:
-    """Parse + interpret one PDF; never raises — failures are data
-    (decode_failures metric), matching the pipeline's skip-not-crash
-    contract (reference records Err, lib.rs:2230-2244)."""
-    try:
-        doc = load_mem(data)
-        device = PlainTextSpanDevice()
-        pages = output_doc(doc, device)
-        return ExtractResult(device.finish(), pages, None)
-    except Exception as e:  # noqa: BLE001 — per-doc fault isolation
-        return ExtractResult([], 0, f"{type(e).__name__}: {e}")
+def error_string(e: Exception) -> str:
+    """The per-document error tag every extraction stage records:
+    ``"<Type>: <message>"``."""
+    return f"{type(e).__name__}: {e}"
 
 
 def extract_spans_flat_from_mem(data: bytes):
-    """Flat-array variant for the Arrow boundary: returns
-    (kinds, texts, media_refs, offsets, pages, error) — no per-span dicts
-    (the mapInPandas stage ships exactly these four lists)."""
+    """Parse + interpret one PDF; returns (kinds, texts, media_refs,
+    offsets, pages, error) — the four span lists the Arrow boundary ships,
+    no per-span dicts.  Never raises — failures are data (decode_failures
+    metric), matching the pipeline's skip-not-crash contract (reference
+    records Err, lib.rs:2230-2244)."""
     try:
         doc = load_mem(data)
         device = PlainTextSpanDevice()
@@ -55,7 +50,13 @@ def extract_spans_flat_from_mem(data: bytes):
         kinds, texts, media_refs, offsets = device.finish_flat()
         return kinds, texts, media_refs, offsets, pages, None
     except Exception as e:  # noqa: BLE001 — per-doc fault isolation
-        return [], [], [], [], 0, f"{type(e).__name__}: {e}"
+        return [], [], [], [], 0, error_string(e)
+
+
+def extract_spans_from_mem(data: bytes) -> ExtractResult:
+    """Dict view of extract_spans_flat_from_mem; never raises."""
+    *flat, pages, error = extract_spans_flat_from_mem(data)
+    return ExtractResult(span_dicts(*flat), pages, error)
 
 
 def extract_text_from_mem(data: bytes) -> str:

@@ -2,15 +2,15 @@
 
 Spark-first design (SURVEY.md §3 "Our lifecycle"):
 
-    raw_docs --repartition(doc_id)--> mapInArrow(extract_batch) --> spans+metrics
+    raw_docs --repartition(doc_id)--> map_documents(kernel) --> spans+metrics
 
   * The reference processes one document at a time, single-threaded
-    (/root/reference/src/lib.rs:2374-2416); extraction is embarrassingly
-    parallel per doc_id, so the whole reference pipeline lives inside an
-    Arrow-batched ``mapInArrow`` UDF — no per-row Python at the Spark API
-    level (per BASELINE.json input_hint; pandas adds only object-dtype
-    overhead for a bytes->flat-lists kernel, so the raw-Arrow variant of
-    mapInPandas is used for the hot path).
+    (/root/reference/src/lib.rs:2374-2416).  ``map_documents`` lifts such a
+    per-document function into one ``mapInArrow`` stage: every PDF stage
+    (spans, page ranges, metadata, the HTML/SVG digests) states only a
+    per-row kernel and one ``pa.schema``; the Spark schema is derived from
+    it.  Kernels own their error policy: a bad document is a row whose
+    ``error`` is ``"<Type>: <message>"``, never a failed task.
   * Skew: documents are hash-spread on doc_id over ``num_partitions``; PDF
     bytes cross exactly one exchange.  A multi-GB document that would be
     a straggler goes through ``extract_documents_paged``, which splits it
@@ -24,85 +24,79 @@ Spark-first design (SURVEY.md §3 "Our lifecycle"):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from ..extract import (
+    doc_metadata,
+    error_string,
+    extract_spans_flat_from_mem,
+    extract_spans_page_range,
+    page_count_of,
+)
 
 SPANS_STRUCT_SQL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
-# UDF boundary schema: spans cross Arrow as four FLAT arrays — converting
-# python list<struct> to Arrow is ~2x slower than flat lists, and the
-# zip back into structs happens JVM-side in whole-stage codegen
-# (arrays_zip), off the Python critical path.
-_FLAT_SCHEMA = (
-    "doc_id string, "
-    "kind array<string>, text array<string>, media_ref array<string>, "
-    "offset array<int>, "
-    "pages int, n_spans int, decode_failures int, error string"
+# Spans cross the Arrow boundary as four FLAT arrays — converting python
+# list<struct> to Arrow is ~2x slower than flat lists, and the zip back
+# into structs happens JVM-side in whole-stage codegen (arrays_zip), off
+# the Python critical path.
+_SPAN_LISTS = [
+    ("kind", pa.list_(pa.string())),
+    ("text", pa.list_(pa.string())),
+    ("media_ref", pa.list_(pa.string())),
+    ("offset", pa.list_(pa.int32())),
+]
+
+_EXTRACT_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), *_SPAN_LISTS, ("pages", pa.int32()),
+     ("n_spans", pa.int32()), ("decode_failures", pa.int32()), ("error", pa.string())]
 )
 
-EXTRACT_SCHEMA = (
-    "doc_id string, "
-    f"spans {SPANS_STRUCT_SQL}, "
-    "pages int, n_spans int, decode_failures int, error string"
+_RANGE_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("content", pa.binary()), ("lo", pa.int32()), ("hi", pa.int32())]
 )
 
-def _extract_batches_arrow(batches):
-    """Arrow-native extraction UDF (mapInArrow): builds output columns as
-    pyarrow arrays directly — the pandas object-dtype round trip both ways
-    costs ~15% of stage wall time at 32 cores (measured), and pandas adds
-    nothing here since the kernel consumes raw bytes and emits flat lists."""
-    import pyarrow as pa
+_PAGED_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("page_num", pa.int32()), *_SPAN_LISTS, ("error", pa.string())]
+)
 
-    from ..extract import extract_spans_flat_from_mem
+_METADATA_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("version", pa.string()), ("page_count", pa.int32())]
+    + [(k, pa.string()) for k in ("title", "author", "subject", "producer", "creator")]
+    + [("error", pa.string())]
+)
 
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("kind", pa.list_(pa.string())),
-            ("text", pa.list_(pa.string())),
-            ("media_ref", pa.list_(pa.string())),
-            ("offset", pa.list_(pa.int32())),
-            ("pages", pa.int32()),
-            ("n_spans", pa.int32()),
-            ("decode_failures", pa.int32()),
-            ("error", pa.string()),
-        ]
-    )
-    for batch in batches:
-        doc_ids = batch.column(batch.schema.get_field_index("doc_id"))
-        contents = batch.column(batch.schema.get_field_index("content"))
-        kinds, texts, medias, offsets = [], [], [], []
-        pages_c, n_spans_c, fails_c, errs = [], [], [], []
-        for i in range(batch.num_rows):
-            c = contents[i].as_py()
-            k, t, m, o, pages, error = extract_spans_flat_from_mem(
-                c if c is not None else b""
+
+def map_documents(df: DataFrame, kernel, schema: pa.Schema) -> DataFrame:
+    """One ``mapInArrow`` stage: ``kernel(*row)`` runs on every row of `df`
+    (its columns in order, as Python values) and yields output tuples laid
+    out as `schema`.  Nothing is caught here — each kernel keeps its own
+    error policy."""
+
+    def run(batches):
+        for batch in batches:
+            rows = []
+            for row in zip(*(c.to_pylist() for c in batch.columns)):
+                rows.extend(kernel(*row))
+            cols = list(zip(*rows)) if rows else [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
             )
-            kinds.append(k)
-            texts.append(t)
-            medias.append(m)
-            offsets.append(o)
-            pages_c.append(pages)
-            n_spans_c.append(len(k))
-            fails_c.append(0 if error is None else 1)
-            errs.append(error)
-        yield pa.RecordBatch.from_arrays(
-            [
-                doc_ids.cast(pa.string()),
-                pa.array(kinds, pa.list_(pa.string())),
-                pa.array(texts, pa.list_(pa.string())),
-                pa.array(medias, pa.list_(pa.string())),
-                pa.array(offsets, pa.list_(pa.int32())),
-                pa.array(pages_c, pa.int32()),
-                pa.array(n_spans_c, pa.int32()),
-                pa.array(fails_c, pa.int32()),
-                pa.array(errs, pa.string()),
-            ],
-            schema=out_schema,
-        )
+
+    run.__name__ = kernel.__name__  # the plan's MapInArrow node shows it
+    return df.mapInArrow(run, from_arrow_schema(schema))
+
+
+def _documents(raw_docs: DataFrame) -> DataFrame:
+    """(doc_id as a string, content) with NULL content read as empty bytes,
+    so it surfaces as an error row rather than vanishing."""
+    return raw_docs.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.coalesce("content", F.lit("").cast("binary")).alias("content"),
+    )
 
 
 def _zip_spans(flat: DataFrame) -> DataFrame:
@@ -117,6 +111,12 @@ def _zip_spans(flat: DataFrame) -> DataFrame:
         .alias("spans"),
         *cols[i + 4:],
     )
+
+
+def _extract_kernel(doc_id, content):
+    kinds, texts, media_refs, offsets, pages, error = extract_spans_flat_from_mem(content)
+    yield (doc_id, kinds, texts, media_refs, offsets, pages, len(kinds),
+           0 if error is None else 1, error)
 
 
 def extract_documents(raw_docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -138,20 +138,21 @@ def extract_documents(raw_docs: DataFrame, num_partitions: int | None = None) ->
     spark = raw_docs.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return _zip_spans(
-        raw_docs.select("doc_id", "content")
-        .repartition(num_partitions, F.col("doc_id"))
-        .mapInArrow(_extract_batches_arrow, _FLAT_SCHEMA)
-    )
+    docs = _documents(raw_docs).repartition(num_partitions, F.col("doc_id"))
+    return _zip_spans(map_documents(docs, _extract_kernel, _EXTRACT_SCHEMA))
 
 
-PAGE_FLAT_SCHEMA = (
-    "doc_id string, page_num int, "
-    "kind array<string>, text array<string>, media_ref array<string>, "
-    "offset array<int>"
-)
-
-PAGE_SCHEMA = f"doc_id string, page_num int, spans {SPANS_STRUCT_SQL}"
+def _extract_range(doc_id, content, lo, hi):
+    """Pages lo..hi of one document, one row per page; a range that raises
+    is one row at its first page with no spans and the error."""
+    try:
+        pages = extract_spans_page_range(content, lo, hi)
+    except Exception as e:  # noqa: BLE001 - per-range fault isolation
+        yield doc_id, lo, [], [], [], [], error_string(e)
+        return
+    for page_num, spans in pages:
+        yield (doc_id, page_num, [s["kind"] for s in spans], [s["text"] for s in spans],
+               [s["media_ref"] for s in spans], [s["offset"] for s in spans], None)
 
 
 def extract_documents_paged(
@@ -159,96 +160,35 @@ def extract_documents_paged(
     pages_per_task: int = 16,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Page-exploded extraction: (doc_id, page_num, spans) with by-pages
-    semantics (fresh interpreter per page — extract_text_by_pages parity,
-    lib.rs:2295-2307/2396).
+    """Page-exploded extraction: (doc_id, page_num, spans, error) with
+    by-pages semantics (fresh interpreter per page — extract_text_by_pages
+    parity, lib.rs:2295-2307/2396).
 
     This is the scale path for multi-GB documents: stage 1 splits each doc
     into page RANGES (content bytes replicated once per range, so a
     500-page doc becomes ~32 independent tasks instead of one straggler);
     stage 2 extracts ranges in parallel.  Output granularity is the page,
     so downstream reassembly is an ordered collect_list per doc_id.
+
+    A range that fails is one row at its first page with empty spans and
+    ``error`` set; a document that fails to load is the range (1, 1).
     """
     spark = raw_docs.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    def split_ranges(batches):
-        import pyarrow as pa
+    def split_ranges(doc_id, content):
+        try:
+            n = page_count_of(content)
+        except Exception:  # noqa: BLE001 - stage 2 reloads it and tags the error
+            yield doc_id, content, 1, 1
+            return
+        for lo in range(1, n + 1, pages_per_task):
+            yield doc_id, content, lo, min(lo + pages_per_task - 1, n)
 
-        from ..extract import page_count_of
-
-        schema = pa.schema(
-            [("doc_id", pa.string()), ("content", pa.binary()),
-             ("lo", pa.int32()), ("hi", pa.int32())]
-        )
-        for b in batches:
-            ids = b.column(b.schema.get_field_index("doc_id"))
-            contents = b.column(b.schema.get_field_index("content"))
-            out = {"doc_id": [], "content": [], "lo": [], "hi": []}
-            for i in range(b.num_rows):
-                c = contents[i].as_py()
-                data = c if c is not None else b""
-                try:
-                    n = page_count_of(data)
-                except Exception:
-                    n = 0
-                lo = 1
-                did = ids[i].as_py()
-                while lo <= n:
-                    hi = min(lo + pages_per_task - 1, n)
-                    out["doc_id"].append(did)
-                    out["content"].append(data)
-                    out["lo"].append(lo)
-                    out["hi"].append(hi)
-                    lo = hi + 1
-            yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-    def extract_ranges(batches):
-        import pyarrow as pa
-
-        from ..extract import extract_spans_page_range
-
-        schema = pa.schema(
-            [("doc_id", pa.string()), ("page_num", pa.int32()),
-             ("kind", pa.list_(pa.string())), ("text", pa.list_(pa.string())),
-             ("media_ref", pa.list_(pa.string())),
-             ("offset", pa.list_(pa.int32()))]
-        )
-        for b in batches:
-            cols = {k: b.column(b.schema.get_field_index(k)) for k in
-                    ("doc_id", "content", "lo", "hi")}
-            rows = {
-                "doc_id": [], "page_num": [],
-                "kind": [], "text": [], "media_ref": [], "offset": [],
-            }
-            for i in range(b.num_rows):
-                try:
-                    pages = extract_spans_page_range(
-                        cols["content"][i].as_py(),
-                        cols["lo"][i].as_py(),
-                        cols["hi"][i].as_py(),
-                    )
-                except Exception:
-                    pages = []
-                did = cols["doc_id"][i].as_py()
-                for page_num, spans in pages:
-                    rows["doc_id"].append(did)
-                    rows["page_num"].append(page_num)
-                    rows["kind"].append([s["kind"] for s in spans])
-                    rows["text"].append([s["text"] for s in spans])
-                    rows["media_ref"].append([s["media_ref"] for s in spans])
-                    rows["offset"].append([s["offset"] for s in spans])
-            yield pa.RecordBatch.from_pydict(rows, schema=schema)
-
-    ranges = raw_docs.select("doc_id", "content").mapInArrow(
-        split_ranges, "doc_id string, content binary, lo int, hi int"
-    )
-    flat = (
-        ranges.repartition(num_partitions, F.xxhash64("doc_id", "lo"))
-        .mapInArrow(extract_ranges, PAGE_FLAT_SCHEMA)
-    )
-    return _zip_spans(flat)
+    ranges = map_documents(_documents(raw_docs), split_ranges, _RANGE_SCHEMA)
+    ranges = ranges.repartition(num_partitions, F.xxhash64("doc_id", "lo"))
+    return _zip_spans(map_documents(ranges, _extract_range, _PAGED_SCHEMA))
 
 
 def reassemble_doc_spans(paged: DataFrame) -> DataFrame:
@@ -268,43 +208,18 @@ def reassemble_doc_spans(paged: DataFrame) -> DataFrame:
     )
 
 
-def extract_metadata(raw_docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def _metadata_kernel(doc_id, content):
+    try:
+        m, error = doc_metadata(content), None
+    except Exception as e:  # noqa: BLE001 - per-doc fault isolation
+        m, error = {}, error_string(e)
+    yield (doc_id, *(m.get(k) for k in _METADATA_SCHEMA.names[1:-1]), error)
+
+
+def extract_metadata(raw_docs: DataFrame) -> DataFrame:
     """print_metadata equivalent (lib.rs:2203-2216) as a side-output table:
     doc_id, version, page_count, title/author/subject/producer/creator."""
-    spark = raw_docs.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    def meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..extract import doc_metadata
-
-        for b in batches:
-            rows = {
-                "doc_id": [], "version": [], "page_count": [],
-                "title": [], "author": [], "subject": [],
-                "producer": [], "creator": [], "error": [],
-            }
-            for doc_id, content in zip(b["doc_id"], b["content"]):
-                try:
-                    m = doc_metadata(bytes(content) if content is not None else b"")
-                    err = None
-                except Exception as e:  # noqa: BLE001 - per-doc isolation
-                    m = {}
-                    err = f"{type(e).__name__}: {e}"
-                rows["doc_id"].append(doc_id)
-                rows["version"].append(m.get("version"))
-                rows["page_count"].append(m.get("page_count"))
-                for k in ("title", "author", "subject", "producer", "creator"):
-                    rows[k].append(m.get(k))
-                rows["error"].append(err)
-            yield pd.DataFrame(rows)
-
-    return raw_docs.select("doc_id", "content").mapInPandas(
-        meta_batches,
-        "doc_id string, version string, page_count int, title string, "
-        "author string, subject string, producer string, creator string, "
-        "error string",
-    )
+    return map_documents(_documents(raw_docs), _metadata_kernel, _METADATA_SCHEMA)
 
 
 def resume_filter(raw_docs: DataFrame, lineage: DataFrame | None) -> DataFrame:

@@ -31,17 +31,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("doc_id", T.StringType(), True),
-        T.StructField("media_kind", T.StringType(), True),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id string, media_kind string, byte_len long, "
@@ -574,20 +563,3 @@ def extract_audio_fp(media: DataFrame, num_partitions: int | None = None) -> Dat
         .select("media_id", "payload")
         .mapInPandas(_audio_fp_batches, AUDIO_FP_SCHEMA)
     )
-
-
-def media_from_spans(spans_df: DataFrame, raw_docs: DataFrame | None = None) -> DataFrame:
-    """Derive a media table from extraction output: every kind='media' span
-    becomes a media row keyed (doc_id, media_ref)."""
-    m = (
-        spans_df.select("doc_id", F.explode("spans").alias("s"))
-        .filter(F.col("s.kind") == "media")
-        .select(
-            F.concat_ws("#", "doc_id", "s.media_ref").alias("media_id"),
-            "doc_id",
-            F.lit("image").alias("media_kind"),
-            F.lit(None).cast("binary").alias("payload"),
-            F.create_map(F.lit("ref"), F.col("s.media_ref")).alias("meta"),
-        )
-    )
-    return m

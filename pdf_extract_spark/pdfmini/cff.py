@@ -97,8 +97,6 @@ STANDARD_STRINGS: list[str] = (
 )
 assert len(STANDARD_STRINGS) == 391, len(STANDARD_STRINGS)
 
-_NAME_TO_SID = {n: i for i, n in enumerate(STANDARD_STRINGS)}
-
 
 class CffError(Exception):
     pass

@@ -77,19 +77,6 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     return out
 
 
-def aes_cbc_decrypt_no_pad(key: bytes, data: bytes) -> bytes:
-    try:
-        from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
-    except ImportError as e:  # pragma: no cover
-        raise RuntimeError("AES decrypt requires the 'cryptography' package") from e
-    iv, body = data[:16], data[16:]
-    body = body[: len(body) - len(body) % 16]
-    if not body:
-        return b""
-    dec = Cipher(algorithms.AES(key), modes.CBC(iv)).decryptor()
-    return dec.update(body) + dec.finalize()
-
-
 class StandardDecryptor:
     """Per-document decryptor for the /Standard security handler."""
 

@@ -145,10 +145,6 @@ class Stream:
         return f"Stream({self.dict!r}, {len(self.raw)} bytes)"
 
 
-def _is_regular(b: int) -> bool:
-    return b not in WHITESPACE and b not in DELIMITERS
-
-
 class Lexer:
     """Single-pass tokenizer/parser over a PDF byte buffer."""
 

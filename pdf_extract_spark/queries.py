@@ -3032,7 +3032,7 @@ def doc_metadata_q(spark, sf_dir):
     from .sources.raw_docs import fixture_corpus_df
 
     raw = fixture_corpus_df(spark, replicas=1)
-    return extract_metadata(raw, num_partitions=4).orderBy("doc_id")
+    return extract_metadata(raw).orderBy("doc_id")
 
 
 def extract_paged_spans(spark, sf_dir):
@@ -3047,69 +3047,45 @@ def extract_paged_spans(spark, sf_dir):
     ).orderBy("doc_id", "page_num")
 
 
-def render_html(spark, sf_dir):
-    """HTML device over the corpus (HTMLOutput parity, lib.rs:1891-1993);
-    returns stable digests, not megabytes of markup."""
+def _render_digests(spark, render, prefix):
+    """One output device over the fixture corpus as stable per-document
+    digests ``(doc_id, <prefix>_len, <prefix>_md5)``, not megabytes of
+    markup; a document the device fails on digests the empty string."""
+    import hashlib
+
+    import pyarrow as pa
+
+    from .operators.extraction import map_documents
     from .sources.raw_docs import fixture_corpus_df
 
-    def html_batches(batches):
-        import hashlib
+    def kernel(doc_id, content):
+        try:
+            out = render(content)
+        except Exception:  # noqa: BLE001 - the golden records it as ""
+            out = ""
+        yield doc_id, len(out), hashlib.md5(out.encode()).hexdigest()
 
-        import pandas as pd
-
-        from .extract import extract_html_from_mem
-
-        for b in batches:
-            rows = {"doc_id": [], "html_len": [], "html_md5": []}
-            for doc_id, content in zip(b["doc_id"], b["content"]):
-                try:
-                    h = extract_html_from_mem(bytes(content))
-                except Exception:
-                    h = ""
-                rows["doc_id"].append(doc_id)
-                rows["html_len"].append(len(h))
-                rows["html_md5"].append(hashlib.md5(h.encode()).hexdigest())
-            yield pd.DataFrame(rows)
-
-    raw = fixture_corpus_df(spark, replicas=1)
-    return (
-        raw.select("doc_id", "content")
-        .mapInPandas(html_batches, "doc_id string, html_len long, html_md5 string")
-        .orderBy("doc_id")
+    schema = pa.schema(
+        [("doc_id", pa.string()), (f"{prefix}_len", pa.int64()), (f"{prefix}_md5", pa.string())]
     )
+    raw = fixture_corpus_df(spark, replicas=1).select("doc_id", "content")
+    return map_documents(raw, kernel, schema).orderBy("doc_id")
+
+
+def render_html(spark, sf_dir):
+    """HTML device over the corpus (HTMLOutput parity, lib.rs:1891-1993)."""
+    from .extract import extract_html_from_mem
+
+    return _render_digests(spark, extract_html_from_mem, "html")
 
 
 def render_svg(spark, sf_dir):
-    """SVG device over the corpus (SVGOutput parity, lib.rs:1995-2087);
-    stable digests, oracled against dist/golden_svg.parquet — the
-    distributed path must reproduce the single-node device bit-for-bit."""
-    from .sources.raw_docs import fixture_corpus_df
+    """SVG device over the corpus (SVGOutput parity, lib.rs:1995-2087),
+    oracled against dist/golden_svg.parquet — the distributed path must
+    reproduce the single-node device bit-for-bit."""
+    from .extract import extract_svg_from_mem
 
-    def svg_batches(batches):
-        import hashlib
-
-        import pandas as pd
-
-        from .extract import extract_svg_from_mem
-
-        for b in batches:
-            rows = {"doc_id": [], "svg_len": [], "svg_md5": []}
-            for doc_id, content in zip(b["doc_id"], b["content"]):
-                try:
-                    s = extract_svg_from_mem(bytes(content))
-                except Exception:
-                    s = ""
-                rows["doc_id"].append(doc_id)
-                rows["svg_len"].append(len(s))
-                rows["svg_md5"].append(hashlib.md5(s.encode()).hexdigest())
-            yield pd.DataFrame(rows)
-
-    raw = fixture_corpus_df(spark, replicas=1)
-    return (
-        raw.select("doc_id", "content")
-        .mapInPandas(svg_batches, "doc_id string, svg_len long, svg_md5 string")
-        .orderBy("doc_id")
-    )
+    return _render_digests(spark, extract_svg_from_mem, "svg")
 
 
 _GOLDEN_SVG_PARQUET = _golden("golden_svg.parquet")
@@ -3405,7 +3381,6 @@ WHERE corpus_fp = (
 ORDER BY query_id, rank
 """
 
-_GOLDEN_ANN_PQ_PARQUET = _golden("golden_ann_pq.parquet")
 
 ANN_PQ_SQL = f"""
 SELECT query_id, nbr_id, rank

@@ -190,68 +190,6 @@ def synthetic_html_corpus_df(
     )
 
 
-def balanced_corpus_df(
-    spark: SparkSession,
-    n_docs: int,
-    num_partitions: int,
-    pct_large: float = 0.10,
-    large_pages: tuple = (40, 80, 120, 160, 200),
-) -> DataFrame:
-    """Benchmark corpus with BYTE-BALANCED partitions: every partition gets
-    the same count of every document size class, dealt deterministically.
-
-    This models what a well-laid-out source gives you for free at cluster
-    scale — parquet/binaryFile splits are balanced by BYTES
-    (spark.sql.files.maxPartitionBytes), and extraction cost ~ bytes, so
-    size-balanced splits are cost-balanced tasks with NO pre-shuffle: the
-    extraction stage runs narrow (zero shuffle before the UDF).
-    """
-    every = max(2, int(round(1.0 / pct_large))) if pct_large > 0 else 0
-    block = (n_docs + num_partitions - 1) // num_partitions or 1
-
-    def gen(batches):
-        import pandas as pd
-
-        from ..fixtures import FIXTURES, fx_large
-
-        fams = sorted(FIXTURES)
-        cache: dict = {}
-
-        def small(i):
-            name = fams[i % len(fams)]
-            if name not in cache:
-                cache[name] = FIXTURES[name]()[0]
-            return name, cache[name]
-
-        def large(ordinal):
-            pages = large_pages[ordinal % len(large_pages)]
-            key = f"large{pages}"
-            if key not in cache:
-                cache[key] = fx_large(pages=pages)[0]
-            return key, cache[key]
-
-        for b in batches:
-            rows = {"doc_id": [], "content": [], "byte_len": [], "source": []}
-            for i in b["id"]:
-                i = int(i)
-                part = i // block  # spark.range gives contiguous blocks
-                j = i % block  # local ordinal within the partition
-                if every and j % every == 0:
-                    # offset the page-size deal by partition id so every
-                    # partition carries the same page-size mix
-                    name, c = large(part + j // every)
-                else:
-                    name, c = small(i)
-                rows["doc_id"].append(f"{name}-{i:09d}")
-                rows["content"].append(c)
-                rows["byte_len"].append(len(c))
-                rows["source"].append(name)
-            yield pd.DataFrame(rows)
-
-    ids = spark.range(0, n_docs, 1, num_partitions)
-    return ids.mapInPandas(gen, RAW_DOCS_SCHEMA)
-
-
 def read_pdf_dir(spark: SparkSession, path: str) -> DataFrame:
     """Cluster ingest: a directory (or glob) of PDF files via the
     binaryFile source; pushdown-friendly (pathGlobFilter prunes listings)."""

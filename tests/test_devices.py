@@ -3,7 +3,13 @@ SVGOutput lib.rs:1995-2087 behaviors)."""
 
 from pdf_extract_spark.devices_html import insert_nbsp
 from pdf_extract_spark.extract import extract_html_from_mem, extract_svg_from_mem
-from pdf_extract_spark.fixtures import _HELV, PdfBuilder, _simple_doc, fx_simple_tj
+from pdf_extract_spark.fixtures import (
+    _HELV,
+    PdfBuilder,
+    _simple_doc,
+    fx_rotated_text,
+    fx_simple_tj,
+)
 
 
 def test_insert_nbsp_reference_semantics():
@@ -35,6 +41,15 @@ def test_html_run_breaks_on_moved_text():
     html = extract_html_from_mem(pdf)
     assert ">ab</div>" in html
     assert ">cd</div>" in html
+
+
+def test_html_rotated_text_prints_nan_font_size():
+    # a 90-degree text matrix gives a negative vx*vy, so the size is NaN;
+    # Rust's Display prints it as "NaN" rather than failing the page
+    pdf, _ = fx_rotated_text()
+    html = extract_html_from_mem(pdf)
+    assert "font-size: NaNpx'>Rot</div>" in html
+    assert html.rstrip().endswith("</div>")
 
 
 def test_svg_paths():

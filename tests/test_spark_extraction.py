@@ -169,6 +169,78 @@ def test_paged_extraction_matches_by_pages(spark):
     assert whole.count() == raw.count()
 
 
+def _paged_by_page(spark, rows):
+    from pdf_extract_spark.operators.extraction import extract_documents_paged
+
+    raw = spark.createDataFrame(
+        rows, "doc_id string, content binary, byte_len long, source string"
+    )
+    return {
+        (r["doc_id"], r["page_num"]): (len(r["spans"]), r["error"])
+        for r in extract_documents_paged(raw, pages_per_task=1, num_partitions=2).collect()
+    }
+
+
+def test_paged_unloadable_document_is_one_error_row(spark):
+    """A document whose page count cannot be read is the range (1, 1):
+    one row at page 1 with no spans and the load error."""
+    got = _paged_by_page(spark, [("garbage", b"%PDF-1.4 garbage", 16, "junk")])
+    assert got == {("garbage", 1): (0, "PdfError: missing document catalog")}
+
+
+def test_paged_failed_range_is_one_error_row(spark):
+    """A page range that raises is one row at its first page; the pages
+    that extract keep error NULL."""
+    from pdf_extract_spark.fixtures import _HELV, PdfBuilder
+
+    b = PdfBuilder()
+    font = f"/Resources << /Font {_HELV} >>"
+    c1 = b.add_stream("", b"BT /F1 12 Tf 72 720 Td (one) Tj ET")
+    c2 = b.add_stream("", b"BT /F1 12 Tf 72 720 Td (two) Tj ET")
+    p1 = b.add(f"<< /Type /Page /Parent 5 0 R /MediaBox [0 0 612 792] "
+               f"/Contents {c1} 0 R {font} >>".encode())
+    p2 = b.add(f"<< /Type /Page /Parent 5 0 R /Contents {c2} 0 R {font} >>".encode())
+    pages = b.add(f"<< /Type /Pages /Kids [{p1} 0 R {p2} 0 R] /Count 2 >>".encode())
+    pdf = b.build(b.add(f"<< /Type /Catalog /Pages {pages} 0 R >>".encode()))
+
+    got = _paged_by_page(spark, [("no-mediabox", pdf, len(pdf), "junk")])
+    assert got == {
+        ("no-mediabox", 1): (3, None),
+        ("no-mediabox", 2): (0, "ValueError: MediaBox required"),
+    }
+
+
+def test_stage_output_schemas(spark):
+    """The Spark schemas derived from each stage's one pa.schema."""
+    from pdf_extract_spark.operators.extraction import (
+        extract_documents_paged,
+        extract_metadata,
+    )
+
+    raw = fixture_corpus_df(spark, replicas=1)
+    spans = "spans:array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    assert extract_documents(raw, num_partitions=2).schema.simpleString() == (
+        f"struct<doc_id:string,{spans},pages:int,n_spans:int,"
+        "decode_failures:int,error:string>"
+    )
+    assert extract_documents_paged(raw, num_partitions=2).schema.simpleString() == (
+        f"struct<doc_id:string,page_num:int,{spans},error:string>"
+    )
+    assert extract_metadata(raw).schema.simpleString() == (
+        "struct<doc_id:string,version:string,page_count:int,title:string,"
+        "author:string,subject:string,producer:string,creator:string,error:string>"
+    )
+
+
+def test_metadata_is_one_arrow_stage(spark):
+    from pdf_extract_spark.operators.extraction import extract_metadata
+
+    plan = extract_metadata(fixture_corpus_df(spark, replicas=1))
+    plan = plan._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
+
+
 def test_golden_spans_parquet_current_and_oracle_matches(spark):
     """(a) dist/golden_spans.parquet is regenerable from the fixtures
     (staleness guard for tools/gen_golden_spans.py); (b) the flagship
@@ -202,7 +274,7 @@ def test_extract_metadata(spark):
     from pdf_extract_spark.operators.extraction import extract_metadata
 
     raw = fixture_corpus_df(spark, replicas=1)
-    m = {r["doc_id"]: r for r in extract_metadata(raw, num_partitions=4).collect()}
+    m = {r["doc_id"]: r for r in extract_metadata(raw).collect()}
     assert m["multipage-000000"]["page_count"] == 2
     assert m["simple_tj-000000"]["version"].startswith("1.")
     assert all(r["error"] is None for r in m.values())

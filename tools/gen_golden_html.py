@@ -5,7 +5,7 @@ Unlike the spans/metadata/media goldens (fixture-spec derived), the HTML
 device output depends on full interpreter geometry (trm positions), so this
 golden is a REVIEWED SNAPSHOT: it runs `extract_html_from_mem` single-node
 (no Spark) over the fixture corpus and records per-doc length + md5.  The
-driver compare then proves (a) the distributed mapInPandas path reproduces
+driver compare then proves (a) the distributed map_documents path reproduces
 the single-node device bit-for-bit and (b) any regression in the device or
 interpreter changes a committed artifact that must be consciously re-blessed.
 

@@ -3,7 +3,7 @@
 
 Like golden_html.parquet, a REVIEWED SNAPSHOT: runs `extract_svg_from_mem`
 single-node (no Spark) over the fixture corpus and records per-doc length
-+ md5.  The driver compare then proves (a) the distributed mapInPandas
++ md5.  The driver compare then proves (a) the distributed map_documents
 path reproduces the single-node SVG device bit-for-bit and (b) any device
 or interpreter regression changes a committed artifact that must be
 consciously re-blessed.
