@@ -8,6 +8,8 @@ via --py-files and invoked inside Arrow batches.
 
 from __future__ import annotations
 
+import hashlib
+
 from .device import PlainTextSpanDevice, span_dicts, spans_to_text
 from .interpreter import Processor, output_doc, output_page
 from .pdfmini.document import Document, EncryptedPdfError, PdfError, load_mem
@@ -136,6 +138,17 @@ def extract_svg_from_mem(data: bytes) -> str:
     device = SVGDevice()
     output_doc(doc, device)
     return device.finish()
+
+
+def render_digest(render, data: bytes):
+    """``(len, md5, error)`` of one output device's markup for one document
+    (``render`` is ``extract_html_from_mem`` or ``extract_svg_from_mem``);
+    a device failure is NULL len/md5 and its tagged error."""
+    try:
+        out = render(data)
+    except Exception as e:  # noqa: BLE001 - one tagged error row per document
+        return None, None, error_string(e)
+    return len(out), hashlib.md5(out.encode()).hexdigest(), None
 
 
 def extract_spans_by_pages(data: bytes) -> list[list[dict]]:

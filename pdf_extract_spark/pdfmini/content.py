@@ -6,14 +6,17 @@ an operator keyword flushes them.  Inline images (BI..ID..EI) are skipped
 as a single ``BI`` op carrying no operands (the reference ignores unknown
 ops, lib.rs:1870).
 
-Tokenization runs as ONE alternation regex advanced with `.match` — each
-step consumes a whole run of whitespace/comments, a number, a name, a
-bracket, or an operator keyword at C speed, and TJ arrays assemble on an
-explicit stack (no recursive read_object / per-char skip_ws round trips).
-Literal/hex strings and inline dicts fall back to the Lexer at the current
-position.  Number parsing mirrors Lexer.read_number exactly (whole regular
-token; int -> float -> 0 fallback), so malformed streams tokenize
-identically to the round-2 implementation.
+Tokenization is ONE regex driven by `finditer`: each match consumes the
+whitespace/comment run before a token (an atomic prefix) and the token
+itself — a number, a name, a plain literal string, a bracket or an
+operator keyword — at C speed, and TJ arrays assemble on an explicit stack
+(no recursive read_object / per-char skip_ws round trips).  A plain string
+followed by a lone ``Tj``, the commonest pair in text-dense pages, is one
+match.  Literal strings with escapes or nesting, hex strings and inline
+dicts fall back to the Lexer, and the iterator restarts after them (and
+after an inline image).  Number parsing mirrors Lexer.read_number exactly
+(whole regular token; int -> float -> 0 fallback), so malformed streams
+tokenize identically to the round-2 implementation.
 """
 
 from __future__ import annotations
@@ -21,7 +24,6 @@ from __future__ import annotations
 import re
 
 from .objects import (
-    _RE_LITERAL_PLAIN,
     DELIMITERS,
     WHITESPACE,
     Lexer,
@@ -31,19 +33,45 @@ from .objects import (
     _unescape_name,
 )
 
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+# whitespace/comment run, possibly empty, atomic: a run once taken is never
+# re-split or given back, so a comment's tail is never read as tokens
+_WS = rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*)"
+
 _TOKEN = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+"  # whitespace/comments: no group
+    _WS
     # NB: dash escaped — [+-.] would be the char RANGE 0x2B-0x2E, which
     # also matches ',' and would tokenize a stray comma as a malformed
     # number instead of an unknown operator that flushes operands
-    rb"|(?P<num>[+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|/(?P<name>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<open>\[)"
-    rb"|(?P<close>\])"
-    rb"|(?P<op>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
-    rb"|(?P<delim>.)",
+    + rb"(?:(?P<num>[+\-.0-9]" + _REGULAR + rb"*)"
+    # plain literal string (no escapes, no nesting), optionally followed
+    # by a lone Tj: the string and its show-text operator in one match
+    + rb"|\((?P<str>[^\\()]*+)\)(?P<tj>" + _WS + rb"Tj(?!" + _REGULAR + rb"))?"
+    + rb"|/(?P<name>" + _REGULAR + rb"*)"
+    + rb"|(?P<open>\[)"
+    + rb"|(?P<close>\])"
+    + rb"|(?P<op>" + _REGULAR + rb"+)"
+    + rb"|(?P<delim>.)"
+    # only whitespace/comments left: one empty match ends the iterator
+    # (a failed match would let finditer search on inside the run)
+    + rb"|\Z)",
     re.DOTALL,
 )
+
+
+def _skip_inline_image(data: bytes, pos: int) -> int:
+    """Position just past the whitespace-delimited EI that ends the inline
+    image whose BI keyword ends at `pos` (end of data if none)."""
+    n = len(data)
+    while True:
+        idx = data.find(b"EI", pos)
+        if idx == -1:
+            return n
+        before_ok = idx == 0 or data[idx - 1] in WHITESPACE
+        after_ok = idx + 2 >= n or data[idx + 2] in WHITESPACE or data[idx + 2] in DELIMITERS
+        if before_ok and after_ok:
+            return idx + 2
+        pos = idx + 2
 
 
 def decode_content(data: bytes) -> list[tuple[str, list]]:
@@ -53,100 +81,75 @@ def decode_content(data: bytes) -> list[tuple[str, list]]:
     stack: list[list] = []  # enclosing arrays
     n = len(data)
     pos = 0
-    match = _TOKEN.match
+    finditer = _TOKEN.finditer
     while pos < n:
-        m = match(data, pos)
-        pos = m.end()
-        g = m.lastgroup
-        if g is None:  # whitespace/comment run
-            continue
-        if g == "num":
-            sink.append(_to_number(m.group("num")))
-            continue
-        if g == "name":
-            raw = m.group("name")
-            if b"#" in raw:
-                raw = _unescape_name(raw)
-            sink.append(Name(raw.decode("latin-1")))
-            continue
-        if g == "open":
-            arr: list = []
-            stack.append(sink)
-            sink = arr
-            continue
-        if g == "close":
-            if stack:
-                parent = stack.pop()
-                parent.append(sink)
-                sink = parent
-            # stray ']': skipped (delimiter we don't handle)
-            continue
-        if g == "op":
-            word = m.group("op")
-            if word == b"true":
-                sink.append(True)
-                continue
-            if word == b"false":
-                sink.append(False)
-                continue
-            if word == b"null":
-                sink.append(None)
-                continue
-            op = word.decode("latin-1")
-            if op == "BI":
-                # inline image: skip to EI (whitespace-delimited)
-                p = pos
-                while True:
-                    idx = data.find(b"EI", p)
-                    if idx == -1:
-                        pos = n
-                        break
-                    before_ok = idx == 0 or data[idx - 1] in WHITESPACE
-                    after_ok = (
-                        idx + 2 >= n
-                        or data[idx + 2] in WHITESPACE
-                        or data[idx + 2] in DELIMITERS
-                    )
-                    if before_ok and after_ok:
-                        pos = idx + 2
-                        break
-                    p = idx + 2
-                ops.append(("BI", []))
+        # restarted only after an inline image or a Lexer fallback
+        for m in finditer(data, pos):
+            g = m.lastgroup
+            if g == "num":
+                sink.append(_to_number(m["num"]))
+            elif g == "tj":
+                # exactly the two tokens: append the string, then flush
+                # (an unbalanced '[' flushes with the top-level operands)
+                sink.append(PdfString(m["str"]))
+                ops.append(("Tj", stack[0] if stack else operands))
+                stack = []
                 operands = []
                 sink = operands
-                stack = []
-                continue
-            # tolerate an unbalanced '[': flush with the top-level operands
-            ops.append((op, stack[0] if stack else operands))
-            stack = []
-            operands = []
-            sink = operands
-            continue
-        # delimiter: '(' literal string, '<' hex string or dict, else skip
-        b = m.group("delim")[0]
-        pos -= 1  # rewind to the delimiter for the Lexer
-        if b == 0x28:
-            # fast path first (no Lexer construction): plain string body
-            m2 = _RE_LITERAL_PLAIN.match(data, pos + 1)
-            e = m2.end()
-            if e < n and data[e] == 0x29:
-                sink.append(PdfString(m2.group()))
-                pos = e + 1
-                continue
-            lex = Lexer(data, pos)
-            try:
-                sink.append(lex.read_literal_string())
-                pos = lex.pos
-            except Exception:
-                pos += 1
-            continue
-        if b == 0x3C:
-            lex = Lexer(data, pos)
-            try:
-                sink.append(lex.read_object(resolve_streams=False))
-                pos = lex.pos
-            except Exception:
-                pos += 1
-            continue
-        pos += 1  # stray delimiter: skip
+            elif g == "op":
+                word = m["op"]
+                if word == b"true":
+                    sink.append(True)
+                elif word == b"false":
+                    sink.append(False)
+                elif word == b"null":
+                    sink.append(None)
+                elif word == b"BI":
+                    pos = _skip_inline_image(data, m.end())
+                    ops.append(("BI", []))
+                    operands = []
+                    sink = operands
+                    stack = []
+                    break
+                else:
+                    # tolerate an unbalanced '[': flush with the top-level operands
+                    ops.append((word.decode("latin-1"), stack[0] if stack else operands))
+                    stack = []
+                    operands = []
+                    sink = operands
+            elif g == "str":
+                sink.append(PdfString(m["str"]))
+            elif g == "name":
+                raw = m["name"]
+                if b"#" in raw:
+                    raw = _unescape_name(raw)
+                sink.append(Name(raw.decode("latin-1")))
+            elif g == "open":
+                stack.append(sink)
+                sink = []
+            elif g == "close":
+                if stack:
+                    parent = stack.pop()
+                    parent.append(sink)
+                    sink = parent
+                # stray ']': skipped (delimiter we don't handle)
+            elif g == "delim":
+                # delimiter: '(' opening an escaped/nested literal string
+                # or '<' opening a hex string or dict is read by the Lexer;
+                # any other delimiter is skipped
+                start = m.start("delim")
+                b = data[start]
+                if b == 0x28 or b == 0x3C:
+                    lex = Lexer(data, start)
+                    try:
+                        if b == 0x28:
+                            sink.append(lex.read_literal_string())
+                        else:
+                            sink.append(lex.read_object(resolve_streams=False))
+                        pos = lex.pos
+                    except Exception:
+                        pos = start + 1
+                    break
+        else:
+            break
     return ops

@@ -2977,7 +2977,7 @@ ORDER BY media_id
 """
 
 RENDER_HTML_SQL = f"""
-SELECT doc_id, html_len, html_md5
+SELECT doc_id, html_len, html_md5, error
 FROM read_parquet('{_GOLDEN_HTML_PARQUET}')
 ORDER BY doc_id
 """
@@ -3049,24 +3049,25 @@ def extract_paged_spans(spark, sf_dir):
 
 def _render_digests(spark, render, prefix):
     """One output device over the fixture corpus as stable per-document
-    digests ``(doc_id, <prefix>_len, <prefix>_md5)``, not megabytes of
-    markup; a document the device fails on digests the empty string."""
-    import hashlib
-
+    digests ``(doc_id, <prefix>_len, <prefix>_md5, error)``, not megabytes
+    of markup; a document the device fails on is NULL len/md5 and its
+    tagged error."""
     import pyarrow as pa
 
+    from .extract import render_digest
     from .operators.extraction import map_documents
     from .sources.raw_docs import fixture_corpus_df
 
     def kernel(doc_id, content):
-        try:
-            out = render(content)
-        except Exception:  # noqa: BLE001 - the golden records it as ""
-            out = ""
-        yield doc_id, len(out), hashlib.md5(out.encode()).hexdigest()
+        yield (doc_id, *render_digest(render, content))
 
     schema = pa.schema(
-        [("doc_id", pa.string()), (f"{prefix}_len", pa.int64()), (f"{prefix}_md5", pa.string())]
+        [
+            ("doc_id", pa.string()),
+            (f"{prefix}_len", pa.int64()),
+            (f"{prefix}_md5", pa.string()),
+            ("error", pa.string()),
+        ]
     )
     raw = fixture_corpus_df(spark, replicas=1).select("doc_id", "content")
     return map_documents(raw, kernel, schema).orderBy("doc_id")
@@ -3091,7 +3092,7 @@ def render_svg(spark, sf_dir):
 _GOLDEN_SVG_PARQUET = _golden("golden_svg.parquet")
 
 RENDER_SVG_SQL = f"""
-SELECT doc_id, svg_len, svg_md5
+SELECT doc_id, svg_len, svg_md5, error
 FROM read_parquet('{_GOLDEN_SVG_PARQUET}')
 ORDER BY doc_id
 """

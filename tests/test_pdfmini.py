@@ -2,6 +2,8 @@
 
 import zlib
 
+import pytest
+
 from pdf_extract_spark.fixtures import PdfBuilder, fx_simple_tj
 from pdf_extract_spark.pdfmini.content import decode_content
 from pdf_extract_spark.pdfmini.document import load_mem
@@ -211,6 +213,43 @@ def test_content_inline_image_skipped():
     ops = decode_content(data)
     assert ("BI", []) in ops
     assert ops[-1][0] == "cm"
+
+
+def _typed(x):
+    """A value with its exact types, so b"a" never passes for PdfString."""
+    if isinstance(x, (list, tuple)):
+        return type(x).__name__, [_typed(e) for e in x]
+    if isinstance(x, dict):
+        return "dict", {k: _typed(v) for k, v in x.items()}
+    return type(x).__name__, x
+
+
+S = PdfString
+
+
+@pytest.mark.parametrize(
+    "data, want",
+    [
+        # a plain string and a lone Tj, with no space or with a comment between
+        (b"(a)Tj", [("Tj", [S(b"a")])]),
+        (b"(a) %c\n Tj", [("Tj", [S(b"a")])]),
+        (b"(a) Tj %c", [("Tj", [S(b"a")])]),
+        (b"(a) Tjx", [("Tjx", [S(b"a")])]),  # not a lone Tj
+        # an unbalanced '[' flushes with the top-level operands
+        (b"[(a) Tj", [("Tj", [])]),
+        (b"] 1 Td", [("Td", [1])]),  # stray ']' skipped
+        (b"<< /K 1 >> BDC", [("BDC", [{"K": 1}])]),
+        # escaped and nested literal strings go through the Lexer
+        (b"(a\\)b) Tj", [("Tj", [S(b"a)b")])]),
+        (b"(a(b)c) Tj", [("Tj", [S(b"a(b)c")])]),
+        (b"BI /W 1 ID x EI", [("BI", [])]),  # EI at the very end
+        (b"BI ID xEIx EI Q", [("BI", []), ("Q", [])]),
+        (b"1_0 0 Td", [("Td", [10, 0])]),  # int('1_0') == 10: historic parity
+        (b"/F1 9 Tf (a) Tj", [("Tf", [Name("F1"), 9]), ("Tj", [S(b"a")])]),
+    ],
+)
+def test_content_tokenizer_edge_cases(data, want):
+    assert _typed(decode_content(data)) == _typed(want)
 
 
 def test_builder_roundtrip_offsets():

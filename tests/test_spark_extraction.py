@@ -458,7 +458,7 @@ def test_golden_svg_parquet_current(spark):
     from gen_golden_svg import OUT, golden_rows
 
     fresh = golden_rows()
-    fresh_rows = sorted(zip(fresh["doc_id"], fresh["svg_len"], fresh["svg_md5"]))
+    fresh_rows = sorted(zip(*fresh.values()))
     on_disk = duckdb.sql(f"SELECT * FROM read_parquet('{OUT}') ORDER BY doc_id").fetchall()
     assert [tuple(r) for r in on_disk] == fresh_rows, (
         "dist/golden_svg.parquet stale — re-run tools/gen_golden_svg.py"
@@ -483,7 +483,7 @@ def test_golden_html_parquet_current(spark):
     from gen_golden_html import OUT, golden_rows
 
     fresh = golden_rows()
-    fresh_rows = sorted(zip(fresh["doc_id"], fresh["html_len"], fresh["html_md5"]))
+    fresh_rows = sorted(zip(*fresh.values()))
     on_disk = duckdb.sql(f"SELECT * FROM read_parquet('{OUT}') ORDER BY doc_id").fetchall()
     assert [tuple(r) for r in on_disk] == fresh_rows, (
         "dist/golden_html.parquet stale — re-run tools/gen_golden_html.py"
@@ -493,3 +493,25 @@ def test_golden_html_parquet_current(spark):
 
     got = sorted(tuple(r) for r in render_html(spark, "").collect())
     assert got == fresh_rows
+
+
+def test_render_device_failure_is_tagged_error_row(spark):
+    """A document the output device raises on is one row with NULL
+    len/md5 and the tagged error, not the digest of the empty string."""
+    import hashlib
+
+    from pdf_extract_spark.fixtures import corpus
+    from pdf_extract_spark.queries import _render_digests
+
+    def render(data):
+        if len(data) % 2:
+            raise ValueError("device failed")
+        return "<p>"
+
+    ok = (3, hashlib.md5(b"<p>").hexdigest(), None)
+    failed = (None, None, "ValueError: device failed")
+    want = sorted((doc_id, *(failed if len(pdf) % 2 else ok)) for doc_id, pdf, _ in corpus(1))
+    assert {r[1:] for r in want} == {ok, failed}
+    got = _render_digests(spark, render, "html")
+    assert got.columns == ["doc_id", "html_len", "html_md5", "error"]
+    assert sorted(tuple(r) for r in got.collect()) == want
