@@ -10,13 +10,12 @@ Tokenization is ONE regex driven by `finditer`: each match consumes the
 whitespace/comment run before a token (an atomic prefix) and the token
 itself — a number, a name, a plain literal string, a bracket or an
 operator keyword — at C speed, and TJ arrays assemble on an explicit stack
-(no recursive read_object / per-char skip_ws round trips).  A plain string
-followed by a lone ``Tj``, the commonest pair in text-dense pages, is one
-match.  Literal strings with escapes or nesting, hex strings and inline
-dicts fall back to the Lexer, and the iterator restarts after them (and
-after an inline image).  Number parsing mirrors Lexer.read_number exactly
-(whole regular token; int -> float -> 0 fallback), so malformed streams
-tokenize identically to the round-2 implementation.
+(no recursive read_object / per-char skip_ws round trips).  Literal
+strings with escapes or nesting, hex strings and inline dicts fall back to
+the Lexer, and the iterator restarts after them (and after an inline
+image).  Number parsing mirrors Lexer.read_number exactly (whole regular
+token; int -> float -> 0 fallback), so malformed streams tokenize
+identically to the round-2 implementation.
 """
 
 from __future__ import annotations
@@ -24,6 +23,8 @@ from __future__ import annotations
 import re
 
 from .objects import (
+    _REGULAR,
+    _WS_RUN,
     DELIMITERS,
     WHITESPACE,
     Lexer,
@@ -33,20 +34,16 @@ from .objects import (
     _unescape_name,
 )
 
-_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
-# whitespace/comment run, possibly empty, atomic: a run once taken is never
-# re-split or given back, so a comment's tail is never read as tokens
-_WS = rb"(?>(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*)"
-
 _TOKEN = re.compile(
-    _WS
+    # the whitespace/comment run before the token, possibly empty; atomic,
+    # so a comment's tail is never read as tokens
+    _WS_RUN + rb"?"
     # NB: dash escaped — [+-.] would be the char RANGE 0x2B-0x2E, which
     # also matches ',' and would tokenize a stray comma as a malformed
     # number instead of an unknown operator that flushes operands
     + rb"(?:(?P<num>[+\-.0-9]" + _REGULAR + rb"*)"
-    # plain literal string (no escapes, no nesting), optionally followed
-    # by a lone Tj: the string and its show-text operator in one match
-    + rb"|\((?P<str>[^\\()]*+)\)(?P<tj>" + _WS + rb"Tj(?!" + _REGULAR + rb"))?"
+    # plain literal string (no escapes, no nesting)
+    + rb"|\((?P<str>[^\\()]*+)\)"
     + rb"|/(?P<name>" + _REGULAR + rb"*)"
     + rb"|(?P<open>\[)"
     + rb"|(?P<close>\])"
@@ -88,14 +85,6 @@ def decode_content(data: bytes) -> list[tuple[str, list]]:
             g = m.lastgroup
             if g == "num":
                 sink.append(_to_number(m["num"]))
-            elif g == "tj":
-                # exactly the two tokens: append the string, then flush
-                # (an unbalanced '[' flushes with the top-level operands)
-                sink.append(PdfString(m["str"]))
-                ops.append(("Tj", stack[0] if stack else operands))
-                stack = []
-                operands = []
-                sink = operands
             elif g == "op":
                 word = m["op"]
                 if word == b"true":

@@ -28,7 +28,9 @@ DELIMITERS = b"()<>[]{}/%"
 
 # lexer hot-path scanners (C-speed spans instead of per-byte Python loops;
 # the lexer is the top profile entry of whole-document extraction)
-_RE_REGULAR = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
+# one regular (non-whitespace, non-delimiter) byte
+_REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_RE_REGULAR = re.compile(_REGULAR + rb"*")
 # A whitespace/comment run, atomic: once taken it is never re-split.  A
 # plain `(?:\s+|%...)+` before a tail that can fail backtracks through
 # every split of the run (time doubles per space) and can re-read a
@@ -47,9 +49,9 @@ _RE_LITERAL_PLAIN = re.compile(rb"[^\\()]*")
 _RE_OBJ_SCALAR = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:"
-    rb"/(?P<name>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<num>[+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<kw>true|false|null)(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
+    rb"/(?P<name>" + _REGULAR + rb"*)"
+    rb"|(?P<num>[+\-.0-9]" + _REGULAR + rb"*)"
+    rb"|(?P<kw>true|false|null)(?!" + _REGULAR + rb")"
     rb"|(?P<end>)"
     rb")"
 )
@@ -59,14 +61,14 @@ _RE_OBJ_SCALAR = re.compile(
 # EOF, handled by the explicit fallback.
 _RE_DICT_STEP = re.compile(
     _WS_RUN + rb"?"
-    rb"(?:(?P<close>>>)|/(?P<key>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*))"
+    rb"(?:(?P<close>>>)|/(?P<key>" + _REGULAR + rb"*))"
 )
 # Reference tail after a non-negative integer: `G R` with the generation a
 # whole all-digits token and R a LONE token, whitespace/comments permitted
 # between tokens — exactly the conditions of the step-by-step path.
 _RE_REF_TAIL = re.compile(
-    _WS_RUN + rb"(\d+)(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
-    + _WS_RUN + rb"R(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
+    _WS_RUN + rb"(\d+)(?!" + _REGULAR + rb")"
+    + _WS_RUN + rb"R(?!" + _REGULAR + rb")"
 )
 
 
