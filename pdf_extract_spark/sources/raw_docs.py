@@ -11,8 +11,9 @@ Ingest paths:
 Sink: documents_spans written as parquet partitioned by an Iceberg-style
 ``bucket(N, doc_id)`` column (hash-mod).  On a real cluster the same frame
 goes to ``df.writeTo("catalog.db.documents_spans").append()`` — parquet is
-the sandbox fallback (no Iceberg runtime jars here); the bucketing column
-keeps the layout identical so the write distribution is cluster-ready.
+the fallback without Iceberg runtime jars; its bucket column has the same
+bucket count, but hashes with xxhash64 (Iceberg's transform uses Murmur3),
+so documents land in different buckets.
 """
 
 from __future__ import annotations
@@ -210,7 +211,7 @@ def iceberg_available(spark: SparkSession) -> bool:
     """True when the Iceberg Spark runtime is on the JVM classpath — the
     gate for the native `writeTo` sink.  This sandbox ships no Iceberg
     jars, so here it returns False and sinks fall back to parquet with the
-    equivalent bucket layout; on a real cluster with
+    same bucket count; on a real cluster with
     `--packages org.apache.iceberg:iceberg-spark-runtime-...` plus a
     configured catalog it flips the native path on with no code change."""
     try:
@@ -237,6 +238,18 @@ def write_spans_iceberg(
         writer.create()
 
 
+def bucketed(df: DataFrame, buckets: int) -> DataFrame:
+    """Add ``bucket = pmod(xxhash64(doc_id), buckets)`` and repartition over
+    ``min(buckets, defaultParallelism)`` writer tasks, so a
+    ``partitionBy("bucket")`` write puts each bucket in exactly one file and
+    the files are written in parallel (see `write_spans` for why the count
+    is explicit).  Shared by the batch and streaming span sinks."""
+    writers = min(buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return df.withColumn(
+        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int")
+    ).repartition(writers, "bucket")
+
+
 def write_spans(
     df: DataFrame,
     path: str,
@@ -248,14 +261,21 @@ def write_spans(
 
     With `iceberg_table` set AND the Iceberg runtime on the classpath this
     is a native `writeTo(table).partitionedBy(bucket(N, doc_id))`; otherwise
-    parquet + an explicit bucket column — the jar-free equivalent layout.
-    Returns which sink ran ("iceberg" | "parquet")."""
+    parquet + an explicit bucket column (`bucketed`): the same bucket count,
+    but hashed with xxhash64 where Iceberg uses Murmur3, so a document may
+    land in a different bucket.
+
+    The parquet writer count is explicit, up to one task per slot.  A
+    repartition by column alone lets AQE merge a small shuffle into one
+    task, which then writes every bucket file in turn, and each file costs
+    about 15 ms on a local file system without libhadoop (Hadoop forks a
+    ``chmod`` for the file and for its ``.crc``).  A repartition by number
+    is never merged.  Returns which sink ran ("iceberg" | "parquet")."""
     if iceberg_table is not None and iceberg_available(df.sparkSession):
         write_spans_iceberg(df, iceberg_table, buckets=buckets, mode=mode)
         return "iceberg"
     (
-        df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(buckets)).cast("int"))
-        .repartition("bucket")
+        bucketed(df, buckets)
         .write.mode(mode)
         .partitionBy("bucket")
         .parquet(path)

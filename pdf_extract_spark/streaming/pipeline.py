@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extraction import extract_documents, lineage_rows, metrics_rows
-from ..sources.raw_docs import RAW_DOCS_SCHEMA
+from ..sources.raw_docs import RAW_DOCS_SCHEMA, bucketed
 
 
 def read_raw_docs_stream(
@@ -59,8 +59,7 @@ def make_batch_processor(
         extracted = extract_documents(batch_df, num_partitions=num_partitions).cache()
         try:
             (
-                extracted.select("doc_id", "spans")
-                .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(16)).cast("int"))
+                bucketed(extracted.select("doc_id", "spans"), 16)
                 .withColumn("run_id", F.lit(run_id))
                 .write.mode("overwrite")
                 .partitionBy("run_id", "bucket")

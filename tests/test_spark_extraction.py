@@ -137,10 +137,20 @@ def test_spans_sink_bucketed(spark, tmp_path):
     back = read_spans(spark, path)
     assert back.count() == raw.count()
     assert set(back.columns) == {"doc_id", "spans"}
-    # bucket pruning layout exists
+    # bucket pruning layout: one parquet file per bucket, written by more
+    # than one task (a column-only repartition lets AQE merge the small
+    # shuffle into a single writer, every file part-00000)
     import os
 
-    assert any(d.startswith("bucket=") for d in os.listdir(path))
+    buckets = [d for d in os.listdir(path) if d.startswith("bucket=")]
+    assert buckets
+    files = {
+        d: [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
+        for d in buckets
+    }
+    assert all(len(fs) == 1 for fs in files.values()), files
+    writers = {fs[0].split("-")[1] for fs in files.values()}
+    assert len(writers) >= 2, files
 
 
 def test_paged_extraction_matches_by_pages(spark):

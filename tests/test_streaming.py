@@ -1,6 +1,7 @@
 """Structured Streaming ingest test: file-source stream -> extraction ->
 foreachBatch sinks with checkpoint."""
 
+import os
 import time
 
 import pytest
@@ -66,6 +67,13 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(spans).count() == n
     assert spark.read.parquet(lineage).count() == n
     assert spark.read.parquet(metrics).count() == n
+    # the batch's spans land in one parquet file per bucket
+    run_dir = os.path.join(spans, "run_id=stream-7")
+    buckets = [d for d in os.listdir(run_dir) if d.startswith("bucket=")]
+    assert buckets
+    for d in buckets:
+        files = [f for f in os.listdir(os.path.join(run_dir, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
     # a DIFFERENT batch id appends (no cross-batch clobbering)
     process(raw.limit(3), 8)
     assert spark.read.parquet(lineage).count() == n + 3
