@@ -47,6 +47,7 @@ def main(argv=None) -> None:
     from pyspark.sql import SparkSession
 
     from pdf_extract_spark.operators.extraction import (
+        SPANS_STRUCT_SQL,
         extract_documents,
         lineage_rows,
         metrics_rows,
@@ -132,7 +133,7 @@ def main(argv=None) -> None:
                 _F.lit(" ("),
                 _F.col("content_type"),
                 _F.lit(")"),
-            ).alias("skip_reason"),
+            ).alias("error"),
         )
         # parser error rows (truncated/corrupt archives) must reach the
         # metrics/lineage tables — the PDF path surfaces decode failures,
@@ -142,7 +143,7 @@ def main(argv=None) -> None:
                 "#", "warc_id",
                 _F.concat(_F.lit("err"), _F.col("rec_index").cast("string")),
             ).alias("doc_id"),
-            _F.col("error"),
+            _F.concat(_F.lit("warc: "), _F.col("error")).alias("error"),
         )
     elif args.input.startswith("synthetic:"):
         raw = synthetic_corpus_df(spark, int(args.input.split(":", 1)[1]))
@@ -202,29 +203,19 @@ def main(argv=None) -> None:
                 .withColumn("decode_failures", F.lit(0).cast("long"))
                 .withColumn("error", F.lit(None).cast("string"))
             )
-        errs = warc_errors.select(
+        # records that were not extracted: zero spans; a parser error
+        # counts as a decode failure, a skipped record does not
+        not_extracted = warc_errors.unionByName(warc_skipped).select(
             "doc_id",
             F.lit(0).cast("long").alias("n_spans"),
-            F.expr(
-                "CAST(array() AS array<struct<kind:string, text:string,"
-                " media_ref:string, offset:int>>)"
-            ).alias("spans"),
+            F.expr(f"CAST(array() AS {SPANS_STRUCT_SQL})").alias("spans"),
             F.lit(0).cast("long").alias("pages"),
-            F.lit(1).cast("long").alias("decode_failures"),
-            F.concat(F.lit("warc: "), F.col("error")).alias("error"),
+            (~F.col("error").startswith("warc: skipped"))
+            .cast("long")
+            .alias("decode_failures"),
+            "error",
         )
-        skipped = warc_skipped.select(
-            "doc_id",
-            F.lit(0).cast("long").alias("n_spans"),
-            F.expr(
-                "CAST(array() AS array<struct<kind:string, text:string,"
-                " media_ref:string, offset:int>>)"
-            ).alias("spans"),
-            F.lit(0).cast("long").alias("pages"),
-            F.lit(0).cast("long").alias("decode_failures"),
-            F.col("skip_reason").alias("error"),
-        )
-        stage = ok.unionByName(errs).unionByName(skipped)
+        stage = ok.unionByName(not_extracted)
     else:
         stage = extract_documents(raw, num_partitions=args.num_partitions)
     extracted = (

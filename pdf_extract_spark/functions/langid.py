@@ -67,18 +67,27 @@ def lang_scores(text: Column) -> dict[str, Column]:
     return scores
 
 
-def identify_language(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, score_de..score_zh, lang_pred) — lang_pred is the
-    arg-max language code, 'und' when no profile scores at all, ties
-    broken by code order."""
-    s = lang_scores(F.col(text_col))
+def _arg_max(s: dict[str, Column]) -> Column:
     best = F.greatest(*[s[lang] for lang in LANGS])
     pred = F.when(best == 0, F.lit("und"))
     for lang in LANGS:
         pred = pred.when(s[lang] == best, F.lit(lang))
+    return pred
+
+
+def langid(text: Column) -> Column:
+    """The arg-max language code of `text`: 'und' when no profile scores
+    at all, ties broken by code order."""
+    return _arg_max(lang_scores(text))
+
+
+def identify_language(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """(doc_id, score_de..score_zh, lang_pred) — lang_pred is `langid`
+    over the same scores."""
+    s = lang_scores(F.col(text_col))
     cols = [F.col(id_col)]
     cols += [s[lang].alias(f"score_{lang}") for lang in LANGS]
-    cols.append(pred.alias("lang_pred"))
+    cols.append(_arg_max(s).alias("lang_pred"))
     return docs.select(*cols)

@@ -2,7 +2,7 @@
 JVM-side Spark SQL expressions (no Python in the hot path) so each has an
 exact DuckDB oracle and stays inside whole-stage codegen.
 
-Operators: token counting, quality scoring, language-ID heuristic,
+Operators: token counting, quality scoring, language ID (functions/langid),
 document fingerprinting.  Deterministic by construction: integer/string
 outputs wherever possible (value-hash-stable across engines).
 """
@@ -12,14 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# marker stopwords per language for the n-gram/stopword language heuristic;
-# deterministic and tiny — broadcast-inlined as a literal array
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": ["the", "and", "of", "to", "in", "is", "that", "it", "with", "for"],
-    "es": ["el", "la", "de", "que", "y", "en", "un", "por", "con", "los"],
-    "de": ["der", "die", "und", "das", "ist", "von", "mit", "den", "nicht", "ein"],
-    "fr": ["le", "la", "et", "les", "des", "un", "une", "du", "est", "dans"],
-}
+from .langid import langid
 
 
 def tokens(col) -> Column:
@@ -56,30 +49,6 @@ def quality_score_x1000(col) -> Column:
     )  # peak at mean token len 5.0
     size_component = F.least(ntok * 25, F.lit(500))
     return (len_component + size_component).cast("long")
-
-
-def lang_scores(col) -> dict[str, Column]:
-    toks = tokens(F.lower(col))
-
-    # NB: the lambda must be single-parameter — a second parameter makes
-    # F.filter pass the element INDEX into it.
-    def score(markers: list[str]) -> Column:
-        return F.size(F.filter(toks, lambda t: t.isin(markers)))
-
-    return {lang: score(markers) for lang, markers in LANG_MARKERS.items()}
-
-
-def lang_id(col) -> Column:
-    """Argmax over marker-word counts; ties broken by language code order
-    (deterministic, mirrors the oracle SQL's CASE chain exactly).
-    Docs with no markers -> 'und'."""
-    scores = lang_scores(col)
-    langs = sorted(LANG_MARKERS)
-    best = F.greatest(*[scores[lang] for lang in langs])
-    out = F.lit(langs[-1])
-    for lang in reversed(langs[:-1]):
-        out = F.when(scores[lang] == best, F.lit(lang)).otherwise(out)
-    return F.when(best > 0, out).otherwise(F.lit("und"))
 
 
 def fingerprint(col) -> Column:
@@ -672,7 +641,7 @@ def document_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         char_count(c).alias("n_chars2"),
         avg_token_len_x100(c).alias("avg_token_len_x100"),
         quality_score_x1000(c).alias("quality_x1000"),
-        lang_id(c).alias("lang_pred"),
+        langid(c).alias("lang_pred"),
         fingerprint(c).alias("fingerprint"),
     )
 

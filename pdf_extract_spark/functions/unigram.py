@@ -24,8 +24,8 @@ Algorithm (hard-EM / Viterbi-EM over the word histogram):
      distributed run and the independent pure-Python golden
      (tools/gen_golden_unigram.py) can never diverge on rounding.
      Ties break on fewer pieces, then the lexicographic piece list.
-     Runs as ONE Arrow-batched mapInPandas over the histogram with the
-     bounded piece table broadcast in the closure.
+     Runs as ONE per-word Arrow stage (``map_documents``) over the
+     histogram with the bounded piece table broadcast in the closure.
   3. M-step: piece counts re-estimated from the Viterbi segmentations
      (weighted by word frequency, one map-side-combined groupBy), then
      pruned to ``vocab_size`` by (count DESC, piece ASC), single code
@@ -49,17 +49,19 @@ operators make (x100 integer stats, cents-scaled deviations).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.extraction import map_documents
 from .bpe import (
     _DRIVER_VOCAB_CHAR_MAX,
     _DRIVER_VOCAB_MAX,
     word_histogram,
 )
+
+_PIECE_COUNTS = pa.schema([("piece", pa.string()), ("cnt", pa.int64())])
+_WORD_PIECES = pa.schema([("word", pa.string()), ("n_pieces", pa.int64())])
 
 
 def _seed_counts_driver(
@@ -256,18 +258,12 @@ def unigram_train(
                 for p in viterbi_pieces(word, counts, denom, mpl):
                     observed[p] = observed.get(p, 0) + wc
         else:
-            def estep(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in it:
-                    out_piece: list[str] = []
-                    out_cnt: list[int] = []
-                    for word, wc in zip(pdf["word"], pdf["wcount"]):
-                        for p in viterbi_pieces(word, counts, denom, mpl):
-                            out_piece.append(p)
-                            out_cnt.append(int(wc))
-                    yield pd.DataFrame({"piece": out_piece, "cnt": out_cnt})
+            def estep(word, wc):
+                for p in viterbi_pieces(word, counts, denom, mpl):
+                    yield p, wc
 
             new = (
-                hist.mapInPandas(estep, "piece string, cnt long")
+                map_documents(hist, estep, _PIECE_COUNTS)
                 .groupBy("piece")
                 .agg(F.sum("cnt").cast("long").alias("cnt"))
                 .collect()  # bounded: <= current vocab size rows
@@ -319,7 +315,7 @@ def unigram_segment(
     if _DRIVER_VOCAB_MAX > 0:
         # guarded driver path (bpe_segment discipline): Viterbi over the
         # collected distinct-word table, shipped back as a broadcast-
-        # sized local relation; large vocabs fall back to mapInPandas
+        # sized local relation; large vocabs fall back to one Arrow stage
         probe = vocab_words.limit(_DRIVER_VOCAB_MAX + 1).collect()
         if len(probe) <= _DRIVER_VOCAB_MAX and (
             sum(len(r[0]) for r in probe) <= _DRIVER_VOCAB_CHAR_MAX
@@ -332,19 +328,10 @@ def unigram_segment(
                 rows, "word string, n_pieces long"
             )
     if npieces is None:
-        def seg(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "word": pdf["word"],
-                        "n_pieces": [
-                            len(viterbi_pieces(w, counts, denom, mpl))
-                            for w in pdf["word"]
-                        ],
-                    }
-                )
+        def seg(word):
+            yield word, len(viterbi_pieces(word, counts, denom, mpl))
 
-        npieces = vocab_words.mapInPandas(seg, "word string, n_pieces long")
+        npieces = map_documents(vocab_words, seg, _WORD_PIECES)
     per_doc = (
         toks.join(npieces, "word")
         .groupBy("doc_id")

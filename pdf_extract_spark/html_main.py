@@ -31,22 +31,21 @@ offset) with offset the running character offset (len(text)+1 per span) —
 the same interleaved text+media span shape as the PDF extraction path, so
 both sources land in one Iceberg spans table.
 
-Spark-side: one Arrow-batched mapInPandas pass (per-doc CPU work, zero
-shuffles), hash-spread over cores exactly like the PDF kernel.
+Spark-side: one per-document Arrow stage (``map_documents``; per-doc CPU
+work, zero shuffles), hash-spread over cores exactly like the PDF kernel.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
-SPAN_SCHEMA = (
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
+from .operators.extraction import SPANS_ARROW, map_documents
 
 _BOILER_TAGS = {"nav", "header", "footer", "aside", "form"}
 _SKIP_TAGS = {"script", "style", "noscript", "template", "svg", "iframe"}
@@ -241,39 +240,32 @@ def extract_main_spans(html: str) -> list[tuple[str, str, str, int]]:
     return spans
 
 
+def _main_content_kernel(doc_id, html):
+    if isinstance(html, bytes):
+        html = html.decode("utf-8", "replace")
+    try:
+        spans = extract_main_spans(str(html))
+    except Exception:  # noqa: BLE001 - a malformed doc yields zero spans
+        spans = []
+    yield doc_id, len(spans), spans
+
+
 def extract_main_content(
     raw: DataFrame,
     html_col: str = "html",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """(doc_id, html) -> (doc_id, n_spans, spans) via one Arrow-batched
-    mapInPandas pass.  Same skew discipline as the PDF path: hash-spread on
-    doc_id before the CPU stage; a malformed doc yields zero spans, never
-    a task failure."""
-    import pandas as pd
-
+    """(doc_id, html) -> (doc_id, n_spans, spans) via one per-document
+    Arrow stage (``map_documents``).  Same skew discipline as the PDF path:
+    hash-spread on doc_id before the CPU stage; a malformed doc yields zero
+    spans, never a task failure."""
     spark = raw.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    id_type = raw.schema["doc_id"].dataType.simpleString()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, counts, spans_col = [], [], []
-            for doc_id, html in zip(pdf["doc_id"], pdf[html_col]):
-                if isinstance(html, (bytes, bytearray)):
-                    html = bytes(html).decode("utf-8", "replace")
-                try:
-                    spans = extract_main_spans(str(html))
-                except Exception:
-                    spans = []
-                ids.append(doc_id)
-                counts.append(len(spans))
-                spans_col.append(spans)
-            yield pd.DataFrame({"doc_id": ids, "n_spans": counts, "spans": spans_col})
-
-    return (
-        raw.repartition(num_partitions, F.xxhash64("doc_id"))
-        .select("doc_id", html_col)
-        .mapInPandas(batches, f"doc_id {id_type}, n_spans long, {SPAN_SCHEMA}")
-    )
+    schema = pa.schema([
+        ("doc_id", to_arrow_type(raw.schema["doc_id"].dataType)),
+        ("n_spans", pa.int64()),
+        ("spans", SPANS_ARROW),
+    ])
+    docs = raw.repartition(num_partitions, F.xxhash64("doc_id")).select("doc_id", html_col)
+    return map_documents(docs, _main_content_kernel, schema)

@@ -6,7 +6,7 @@ the published NumWordsRulesClassifier decision rules), re-expressed as
 pure DataFrame operations.
 
 Where ``html_main.py`` is a readability-style DOM kernel running inside
-an Arrow-batched mapInPandas, this operator keeps EVERYTHING in the JVM:
+a per-document Arrow stage, this operator keeps EVERYTHING in the JVM:
 
 1. Non-content subtrees (script/style/noscript/template, comments) are
    removed scan-side with non-greedy regexes (no backreferences — the

@@ -11,22 +11,26 @@ Four families, scale-ranked:
   * n-gram Jaccard — inverted-index candidate generation (explode shingles,
                      self-join on shingle, count common) then exact Jaccard;
                      candidate blocking bounds the pair space.
-  * simhash        — 64-bit fingerprint via vectorized Pandas UDF (numpy);
-                     hamming-near pairs within LSH-style prefix buckets.
+  * simhash        — 64-bit fingerprint per document in one Arrow stage
+                     (numpy); hamming-near pairs within LSH-style prefix
+                     buckets.
 
 All Spark-side logic is built-in functions except the simhash kernel
-(Arrow-batched, numpy bit-ops — the documented slow path).
+(per-document Arrow stage, numpy bit-ops — the documented slow path).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..functions.text import fingerprint, tokens
+from .extraction import map_documents
 
 
 def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -260,53 +264,53 @@ def ngram_jaccard_pairs(
 
 
 # ----------------------------------------------------------------------------
-# SimHash (vectorized Pandas UDF — numpy bit kernel)
+# SimHash (per-document Arrow stage — numpy bit kernel)
 # ----------------------------------------------------------------------------
 
 
-def _simhash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Vectorized simhash kernel: md5 once per UNIQUE token (cached across
-    the batch), per-doc accumulation as one (uniq_tokens x 64) numpy matmul
-    weighted by token counts — identical output to the per-token loop it
-    replaces, ~10x fewer hash calls on natural text."""
-    import hashlib
+_SHIFTS = np.arange(64, dtype=np.uint64)
 
-    import numpy as np
 
-    shifts = np.arange(64, dtype=np.uint64)
+def _simhash_value(text, cache: dict[str, int]) -> int:
+    """Signed 64-bit simhash of one text: md5 once per UNIQUE token (kept
+    in `cache` across documents), accumulation as one (uniq_tokens x 64)
+    numpy matmul weighted by token counts — identical output to the
+    per-token loop it replaces, ~10x fewer hash calls on natural text."""
+    toks = str(text).lower().split()
+    if toks:
+        uniq, counts = np.unique(np.array(toks, dtype=object), return_counts=True)
+        hs = np.empty(len(uniq), dtype=np.uint64)
+        for i, tok in enumerate(uniq):
+            h = cache.get(tok)
+            if h is None:
+                h = cache[tok] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
+            hs[i] = h
+        bits = ((hs[:, None] >> _SHIFTS[None, :]) & np.uint64(1)).astype(np.int64)
+        acc = ((bits * 2 - 1) * counts[:, None].astype(np.int64)).sum(axis=0)
+    else:
+        acc = np.zeros(64, dtype=np.int64)
+    sim = int(((acc > 0).astype(np.uint64) << _SHIFTS).sum())
+    return sim - (1 << 64) if sim >= (1 << 63) else sim
+
+
+def _simhash_kernel():
+    """Per-document simhash kernel whose token-hash cache lives for one
+    task.  It calls the module-level `_simhash_value`, so a worker that
+    unpickles it imports this package (and with it `zipcache`)."""
     cache: dict[str, int] = {}
 
-    def h64(tok: str) -> int:
-        v = cache.get(tok)
-        if v is None:
-            v = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-            cache[tok] = v
-        return v
+    def simhash_doc(doc_id, text):
+        yield doc_id, _simhash_value(text, cache)
 
-    for pdf in batches:
-        out_ids = []
-        out_hashes = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            toks = str(text).lower().split()
-            if toks:
-                uniq, counts = np.unique(np.array(toks, dtype=object), return_counts=True)
-                hs = np.fromiter((h64(t) for t in uniq), dtype=np.uint64, count=len(uniq))
-                bits = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-                acc = ((bits * 2 - 1) * counts[:, None].astype(np.int64)).sum(axis=0)
-            else:
-                acc = np.zeros(64, dtype=np.int64)
-            sim = int(((acc > 0).astype(np.uint64) << shifts).sum())
-            out_ids.append(doc_id)
-            # store as signed int64 for Spark LongType
-            out_hashes.append(sim - (1 << 64) if sim >= (1 << 63) else sim)
-        yield pd.DataFrame({"doc_id": out_ids, "simhash": out_hashes})
+    return simhash_doc
 
 
 def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    id_type = docs.schema["doc_id"].dataType.simpleString()
-    return _spread(docs).select("doc_id", F.col(text_col).alias("text")).mapInPandas(
-        _simhash_batch, f"doc_id {id_type}, simhash long"
+    schema = pa.schema(
+        [("doc_id", to_arrow_type(docs.schema["doc_id"].dataType)), ("simhash", pa.int64())]
     )
+    texts = _spread(docs).select("doc_id", F.col(text_col).alias("text"))
+    return map_documents(texts, _simhash_kernel(), schema)
 
 
 def simhash_near_pairs(docs: DataFrame, text_col: str = "text", max_hamming: int = 3) -> DataFrame:

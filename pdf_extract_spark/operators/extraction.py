@@ -6,11 +6,13 @@ Spark-first design (SURVEY.md §3 "Our lifecycle"):
 
   * The reference processes one document at a time, single-threaded
     (/root/reference/src/lib.rs:2374-2416).  ``map_documents`` lifts such a
-    per-document function into one ``mapInArrow`` stage: every PDF stage
-    (spans, page ranges, metadata, the HTML/SVG digests) states only a
-    per-row kernel and one ``pa.schema``; the Spark schema is derived from
-    it.  Kernels own their error policy: a bad document is a row whose
-    ``error`` is ``"<Type>: <message>"``, never a failed task.
+    per-document function into one ``mapInArrow`` stage: every per-row
+    Python stage in the package (the PDF stages here, HTML main content,
+    WARC records, media decoders, simhash, winnowing, unigram, the
+    synthetic corpora) states only a per-row kernel and one ``pa.schema``;
+    the Spark schema is derived from it.  Kernels own their error policy:
+    a bad document is a row whose ``error`` is ``"<Type>: <message>"``,
+    never a failed task.
   * Skew: documents are hash-spread on doc_id over ``num_partitions``; PDF
     bytes cross exactly one exchange.  A multi-GB document that would be
     a straggler goes through ``extract_documents_paged``, which splits it
@@ -27,7 +29,7 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, from_arrow_type
 
 from ..extract import (
     doc_metadata,
@@ -36,8 +38,6 @@ from ..extract import (
     extract_spans_page_range,
     page_count_of,
 )
-
-SPANS_STRUCT_SQL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 # Spans cross the Arrow boundary as four FLAT arrays — converting python
 # list<struct> to Arrow is ~2x slower than flat lists, and the zip back
@@ -49,6 +49,11 @@ _SPAN_LISTS = [
     ("media_ref", pa.list_(pa.string())),
     ("offset", pa.list_(pa.int32())),
 ]
+
+# The one span struct type, for kernels that emit it whole (html_main) and,
+# as SQL, for JVM-side casts.
+SPANS_ARROW = pa.list_(pa.struct([(k, t.value_type) for k, t in _SPAN_LISTS]))
+SPANS_STRUCT_SQL = from_arrow_type(SPANS_ARROW).simpleString()
 
 _EXTRACT_SCHEMA = pa.schema(
     [("doc_id", pa.string()), *_SPAN_LISTS, ("pages", pa.int32()),

@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed through Arrow-batched mapInPandas.
+with typed metadata, processed one asset at a time in a per-row Arrow
+stage (``operators/extraction.map_documents``).
 
 Decode kernels, by honesty tier:
   * REAL, dependency-free: PPM (P6), uncompressed 24-bit BMP, and PNG
@@ -26,17 +27,13 @@ Swapping in PIL/ffmpeg is a one-function change per format.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
-FEATURE_SCHEMA = (
-    "media_id string, media_kind string, byte_len long, "
-    "sha256 string, width int, height int, feature array<float>, "
-    "decoder string"
-)
+from .extraction import map_documents
 
 
 # ---------------------------------------------------------------------------
@@ -323,32 +320,19 @@ def _decode_any(kind: str, data: bytes) -> tuple[int, int, list[float], str]:
     return w, h, feat, "stub"
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {
-            "media_id": [],
-            "media_kind": [],
-            "byte_len": [],
-            "sha256": [],
-            "width": [],
-            "height": [],
-            "feature": [],
-            "decoder": [],
-        }
-        for media_id, kind, payload in zip(
-            pdf["media_id"], pdf["media_kind"], pdf["payload"]
-        ):
-            data = bytes(payload) if payload is not None else b""
-            w, h, feat, decoder = _decode_any(str(kind), data)
-            rows["media_id"].append(media_id)
-            rows["media_kind"].append(kind)
-            rows["byte_len"].append(len(data))
-            rows["sha256"].append(hashlib.sha256(data).hexdigest())
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["feature"].append(feat)
-            rows["decoder"].append(decoder)
-        yield pd.DataFrame(rows)
+_FEATURE_SCHEMA = pa.schema([
+    ("media_id", pa.string()), ("media_kind", pa.string()),
+    ("byte_len", pa.int64()), ("sha256", pa.string()), ("width", pa.int32()),
+    ("height", pa.int32()), ("feature", pa.list_(pa.float32())),
+    ("decoder", pa.string()),
+])
+
+
+def _feature_kernel(media_id, kind, payload):
+    data = payload or b""
+    w, h, feat, decoder = _decode_any(str(kind), data)
+    yield (media_id, kind, len(data), hashlib.sha256(data).hexdigest(), w, h,
+           feat, decoder)
 
 
 def extract_media_features(media: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -357,10 +341,9 @@ def extract_media_features(media: DataFrame, num_partitions: int | None = None) 
     spark = media.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (
-        media.repartition(num_partitions, F.xxhash64("media_id"))
-        .select("media_id", "media_kind", "payload")
-        .mapInPandas(_feature_batches, FEATURE_SCHEMA)
+    media = media.repartition(num_partitions, F.xxhash64("media_id"))
+    return map_documents(
+        media.select("media_id", "media_kind", "payload"), _feature_kernel, _FEATURE_SCHEMA
     )
 
 
@@ -386,41 +369,20 @@ def image_dhash(img) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-DHASH_SCHEMA = (
-    "media_id string, width long, height long, dhash long, decoder string"
-)
+_DHASH_SCHEMA = pa.schema([
+    ("media_id", pa.string()), ("width", pa.int64()), ("height", pa.int64()),
+    ("dhash", pa.int64()), ("decoder", pa.string()),
+])
 
 
-def _dhash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {"media_id": [], "width": [], "height": [], "dhash": [],
-                "decoder": []}
-        for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-            data = bytes(payload) if payload is not None else b""
-            try:
-                img = decode_image_array(data)
-                w, h = img.shape[1], img.shape[0]
-                decoder = _decoder_tag(data)
-                dh = image_dhash(img)
-            except Exception:
-                # malformed / stub-tier payload: tagged, never a task failure
-                w = h = 0
-                dh = None
-                decoder = "stub"
-            rows["media_id"].append(media_id)
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["dhash"].append(dh)
-            rows["decoder"].append(decoder)
-        # Int64 from the PYTHON list directly: pd.DataFrame would coerce
-        # an int+None column to float64 first, silently rounding 64-bit
-        # hashes to 53-bit mantissas
-        rows["dhash"] = pd.array(rows["dhash"], dtype="Int64")
-        out = pd.DataFrame(rows)
-        for c in pdf.columns:
-            if c not in ("media_id", "payload"):
-                out[c] = list(pdf[c])  # passthrough (e.g. stream ts)
-        yield out
+def _dhash_kernel(media_id, payload, *passthrough):
+    data = payload or b""
+    try:
+        img = decode_image_array(data)
+        row = (img.shape[1], img.shape[0], image_dhash(img), _decoder_tag(data))
+    except Exception:  # noqa: BLE001 - malformed / stub-tier payload: tagged
+        row = (0, 0, None, "stub")
+    yield media_id, *row, *passthrough
 
 
 def extract_media_dhash(
@@ -438,15 +400,16 @@ def extract_media_dhash(
     spark = media.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    extra = "".join(
-        f", {c} {dict(media.dtypes)[c]}" for c in passthrough
+    schema = pa.schema(
+        list(_DHASH_SCHEMA)
+        + [(c, to_arrow_type(media.schema[c].dataType)) for c in passthrough]
     )
-    return (
+    images = (
         media.filter(F.col("media_kind") == "image")
         .repartition(num_partitions, F.xxhash64("media_id"))
         .select("media_id", "payload", *passthrough)
-        .mapInPandas(_dhash_batches, DHASH_SCHEMA + extra)
     )
+    return map_documents(images, _dhash_kernel, schema)
 
 
 def banded_hamming_pairs(
@@ -521,34 +484,19 @@ def audio_fingerprint(feature: list) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-AUDIO_FP_SCHEMA = (
-    "media_id string, sample_rate long, n_channels long, "
-    "audio_fp long, decoder string"
-)
+_AUDIO_FP_SCHEMA = pa.schema([
+    ("media_id", pa.string()), ("sample_rate", pa.int64()),
+    ("n_channels", pa.int64()), ("audio_fp", pa.int64()), ("decoder", pa.string()),
+])
 
 
-def _audio_fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {"media_id": [], "sample_rate": [], "n_channels": [],
-                "audio_fp": [], "decoder": []}
-        for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-            data = bytes(payload) if payload is not None else b""
-            try:
-                rate, nch, feat, decoder = decode_audio_real(data)
-                fp = audio_fingerprint(feat)
-            except Exception:
-                rate = nch = 0
-                fp = None
-                decoder = "stub"
-            rows["media_id"].append(media_id)
-            rows["sample_rate"].append(rate)
-            rows["n_channels"].append(nch)
-            rows["audio_fp"].append(fp)
-            rows["decoder"].append(decoder)
-        # Int64 from the Python list directly (same float64-coercion trap
-        # as the dhash path)
-        rows["audio_fp"] = pd.array(rows["audio_fp"], dtype="Int64")
-        yield pd.DataFrame(rows)
+def _audio_fp_kernel(media_id, payload):
+    try:
+        rate, nch, feat, decoder = decode_audio_real(payload or b"")
+        row = (rate, nch, audio_fingerprint(feat), decoder)
+    except Exception:  # noqa: BLE001 - malformed / stub-tier payload: tagged
+        row = (0, 0, None, "stub")
+    yield media_id, *row
 
 
 def extract_audio_fp(media: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -557,9 +505,9 @@ def extract_audio_fp(media: DataFrame, num_partitions: int | None = None) -> Dat
     spark = media.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (
+    audio = (
         media.filter(F.col("media_kind") == "audio")
         .repartition(num_partitions, F.xxhash64("media_id"))
         .select("media_id", "payload")
-        .mapInPandas(_audio_fp_batches, AUDIO_FP_SCHEMA)
     )
+    return map_documents(audio, _audio_fp_kernel, _AUDIO_FP_SCHEMA)

@@ -1233,13 +1233,37 @@ ORDER BY 1, 2
 # documents-table text analysis + dedup + span ops
 # ---------------------------------------------------------------------------
 
-_LANG_CASES_SQL = """
-  CASE WHEN best = 0 THEN 'und'
-       WHEN s_de = best THEN 'de'
-       WHEN s_en = best THEN 'en'
-       WHEN s_es = best THEN 'es'
-       ELSE 'fr' END
-"""
+# DuckDB twin of functions/langid: letter-class tokens and the Han count
+# (over `text`), one score per profile (over `toks`), the arg-max CASE
+_LANGID_TOKED_SQL = r"""list_filter(regexp_split_to_array(lower(text), '[^\p{L}]+'),
+                     x -> x <> '') AS toks,
+         len(regexp_extract_all(text, '[一-鿿]', 0)) AS score_zh"""
+
+
+def _langid_score_sql(words: tuple[str, ...]) -> str:
+    inlist = ", ".join(f"'{w}'" for w in words)
+    return (
+        "len(list_filter(toks, x -> x IN (" + inlist + ")))"
+    )
+
+
+def _langid_scores_sql() -> str:
+    from .functions.langid import LANGS, PROFILES
+
+    return ",\n         ".join(
+        f"{_langid_score_sql(PROFILES[lang])} AS score_{lang}"
+        for lang in LANGS
+        if lang != "zh"
+    )
+
+
+def _langid_pred_sql() -> str:
+    from .functions.langid import LANGS
+
+    best = "greatest(" + ", ".join(f"score_{lang}" for lang in LANGS) + ")"
+    return "CASE WHEN " + best + " = 0 THEN 'und' " + " ".join(
+        f"WHEN score_{lang} = {best} THEN '{lang}'" for lang in LANGS
+    ) + " END"
 
 
 def doc_stats(spark, sf_dir):
@@ -1249,35 +1273,26 @@ def doc_stats(spark, sf_dir):
 
 DOC_STATS_SQL = r"""
 WITH base AS (
-  SELECT doc_id,
-         regexp_split_to_array(trim(text), '\s+') AS toks,
-         regexp_split_to_array(trim(lower(text)), '\s+') AS ltoks,
-         text
+  SELECT doc_id, text,
+         regexp_split_to_array(trim(text), '\s+') AS wtoks,
+         """ + _LANGID_TOKED_SQL + r"""
   FROM documents
 ), m AS (
-  SELECT doc_id, text, toks, ltoks,
-         CAST(len(toks) AS BIGINT) AS n_tokens,
+  SELECT doc_id, text,
+         CAST(len(wtoks) AS BIGINT) AS n_tokens,
          CAST(length(text) AS BIGINT) AS n_chars2,
-         CAST(floor(list_sum(list_transform(toks, t -> length(t))) * 100.0
-              / greatest(len(toks), 1)) AS BIGINT) AS avg_token_len_x100,
-         len(list_filter(ltoks, t -> list_contains(
-             ['der','die','und','das','ist','von','mit','den','nicht','ein'], t))) AS s_de,
-         len(list_filter(ltoks, t -> list_contains(
-             ['the','and','of','to','in','is','that','it','with','for'], t))) AS s_en,
-         len(list_filter(ltoks, t -> list_contains(
-             ['el','la','de','que','y','en','un','por','con','los'], t))) AS s_es,
-         len(list_filter(ltoks, t -> list_contains(
-             ['le','la','et','les','des','un','une','du','est','dans'], t))) AS s_fr
+         CAST(floor(list_sum(list_transform(wtoks, t -> length(t))) * 100.0
+              / greatest(len(wtoks), 1)) AS BIGINT) AS avg_token_len_x100,
+         """ + _langid_scores_sql() + r""",
+         score_zh
   FROM base
-), scored AS (
-  SELECT *, greatest(s_de, s_en, s_es, s_fr) AS best FROM m
 )
 SELECT doc_id, n_tokens, n_chars2, avg_token_len_x100,
        CAST(greatest(0, 500 - abs(avg_token_len_x100 - 500))
             + least(n_tokens * 25, 500) AS BIGINT) AS quality_x1000,
-       (""" + _LANG_CASES_SQL + r""") AS lang_pred,
+       """ + _langid_pred_sql() + r""" AS lang_pred,
        md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
-FROM scored
+FROM m
 ORDER BY doc_id
 """
 
@@ -2866,62 +2881,51 @@ ORDER BY doc_id
 """
 
 
+def _winnow_kernel(doc_id, text):
+    import hashlib
+
+    import numpy as np
+
+    t = text or ""
+    n = max(len(t) - 7, 1)
+    hs = np.array([hashlib.md5(t[i : i + 8].encode("utf-8")).hexdigest() for i in range(n)])
+    # min over string dtype has no ufunc: rank via sorted-unique
+    # (rank order == lexicographic order), integer sliding min
+    uniq, inv = np.unique(hs, return_inverse=True)
+    if n >= 4:
+        fps = uniq[np.unique(np.lib.stride_tricks.sliding_window_view(inv, 4).min(axis=1))]
+    else:
+        fps = uniq[:1]
+    for fp in fps.tolist():
+        yield doc_id, fp
+
+
 def doc_winnow_fingerprints(spark, sf_dir):
     """Winnowing document fingerprints: rolling 8-gram md5, window-4
     minimum, distinct survivors — the classic local fingerprinting scheme
     for plagiarism/near-dup detection.
 
     Plan shape: the whole per-doc pipeline (hash every 8-char gram, sliding
-    window-4 min, per-doc dedup) runs INSIDE ``mapInArrow`` — winnowing is
-    embarrassingly parallel per document, so exploding one row per character
-    position (round-2 shape) shuffled ~40x the corpus text bytes for a
-    computation that never crosses a document boundary.  Zero shuffles
-    until the final presentation sort of the (much smaller) fingerprint
-    set.  A nested transform/slice array expression is also ruled out:
-    Catalyst re-evaluates the inner lambda per outer element (no CSE inside
-    lambdas) — measured as a >9 min hang at sf0.1."""
+    window-4 min, per-doc dedup) runs INSIDE one per-document Arrow stage
+    (``map_documents``) — winnowing is embarrassingly parallel per document,
+    so exploding one row per character position (round-2 shape) shuffled
+    ~40x the corpus text bytes for a computation that never crosses a
+    document boundary.  Zero shuffles until the final presentation sort of
+    the (much smaller) fingerprint set.  A nested transform/slice array
+    expression is also ruled out: Catalyst re-evaluates the inner lambda per
+    outer element (no CSE inside lambdas) — measured as a >9 min hang at
+    sf0.1."""
     import pyarrow as pa
 
     from .operators.dedup import _spread
+    from .operators.extraction import map_documents
 
     # CPU-bound per-doc kernel: spread a small-file scan over all cores
     # (a 1x-text-bytes round-robin exchange vs the 40x char-explode shuffle
     # this kernel replaced; no-op at real scale)
     docs = _spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
-
-    def kernel(batches):
-        import hashlib
-
-        import numpy as np
-
-        md5 = hashlib.md5
-        swv = np.lib.stride_tricks.sliding_window_view
-        for batch in batches:
-            out_ids: list = []
-            out_fps: list = []
-            for d, t in zip(
-                batch.column("doc_id").to_pylist(), batch.column("text").to_pylist()
-            ):
-                t = t or ""
-                n = max(len(t) - 7, 1)
-                hs = np.array(
-                    [md5(t[i : i + 8].encode("utf-8")).hexdigest() for i in range(n)]
-                )
-                # min over string dtype has no ufunc: rank via sorted-unique
-                # (rank order == lexicographic order), integer sliding min
-                uniq, inv = np.unique(hs, return_inverse=True)
-                if n >= 4:
-                    fps = uniq[np.unique(swv(inv, 4).min(axis=1))]
-                else:
-                    fps = uniq[:1]
-                out_ids.extend([d] * len(fps))
-                out_fps.extend(fps.tolist())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.int64()), pa.array(out_fps, type=pa.string())],
-                names=["doc_id", "fp"],
-            )
-
-    return docs.mapInArrow(kernel, "doc_id long, fp string").orderBy("doc_id", "fp")
+    schema = pa.schema([("doc_id", pa.int64()), ("fp", pa.string())])
+    return map_documents(docs, _winnow_kernel, schema).orderBy("doc_id", "fp")
 
 
 WINNOW_SQL = r"""
@@ -5045,40 +5049,20 @@ def doc_langid(spark, sf_dir):
     return identify_language(docs).orderBy("doc_id")
 
 
-def _langid_score_sql(words: tuple[str, ...]) -> str:
-    inlist = ", ".join(f"'{w}'" for w in words)
-    return (
-        "len(list_filter(toks, x -> x IN (" + inlist + ")))"
-    )
-
-
 def _langid_sql() -> str:
-    from .functions.langid import LANGS, PROFILES
-
-    scores = ",\n         ".join(
-        f"{_langid_score_sql(PROFILES[lang])} AS score_{lang}"
-        for lang in LANGS
-        if lang != "zh"
-    )
-    best = "greatest(" + ", ".join(f"score_{lang}" for lang in LANGS) + ")"
-    pred = "CASE WHEN " + best + " = 0 THEN 'und' " + " ".join(
-        f"WHEN score_{lang} = {best} THEN '{lang}'" for lang in LANGS
-    ) + " END"
     return f"""
 WITH toked AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '[^\\p{{L}}]+'),
-                     x -> x <> '') AS toks,
-         len(regexp_extract_all(text, '[一-鿿]', 0)) AS score_zh
+         {_LANGID_TOKED_SQL}
   FROM documents
 ), scored AS (
   SELECT doc_id,
-         {scores},
+         {_langid_scores_sql()},
          score_zh
   FROM toked
 )
 SELECT doc_id, score_de, score_en, score_es, score_fr, score_zh,
-       {pred} AS lang_pred
+       {_langid_pred_sql()} AS lang_pred
 FROM scored
 ORDER BY doc_id
 """

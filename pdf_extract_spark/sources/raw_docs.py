@@ -18,9 +18,13 @@ so documents land in different buckets.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
+
+from ..operators.extraction import SPANS_ARROW, map_documents
 
 RAW_DOCS_SCHEMA = T.StructType(
     [
@@ -31,19 +35,10 @@ RAW_DOCS_SCHEMA = T.StructType(
     ]
 )
 
-SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), True),
-    ]
-)
-
 DOCUMENTS_SPANS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
+        T.StructField("spans", from_arrow_type(SPANS_ARROW), True),
     ]
 )
 
@@ -98,50 +93,28 @@ def synthetic_corpus_df(
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     large_every = max(2, int(round(1.0 / pct_large))) if pct_large > 0 else 0
 
-    def gen(batches):
-        import pandas as pd
+    from ..fixtures import FIXTURES, fx_large
 
-        from ..fixtures import FIXTURES, fx_large
+    fam_names = sorted(FIXTURES)
+    cache: dict = {}  # one per task: the kernel is shipped with its closure
 
-        fam_names = sorted(FIXTURES)
-        cache: dict = {}
-
-        def small(i: int):
-            name = fam_names[i % len(fam_names)]
-            if name not in cache:
-                pdf, _ = FIXTURES[name]()
-                cache[name] = pdf
-            return name, cache[name]
-
-        def large(i: int):
+    def gen(i):
+        if large_every and i % large_every == 0:
             # cycle by large-doc ordinal, not raw id (raw ids of large docs
             # are all multiples of large_every, so i % k would be constant)
             pages = large_pages[(i // large_every) % len(large_pages)]
-            key = f"large{pages}"
-            if key not in cache:
-                pdf, _ = fx_large(pages=pages)
-                cache[key] = pdf
-            return key, cache[key]
+            name = f"large{pages}"
+            if name not in cache:
+                cache[name] = fx_large(pages=pages)[0]
+        else:
+            name = fam_names[i % len(fam_names)]
+            if name not in cache:
+                cache[name] = FIXTURES[name]()[0]
+        content = cache[name]
+        yield f"{name}-{i:09d}", content, len(content), name
 
-        for pdf_batch in batches:
-            rows = {"doc_id": [], "content": [], "byte_len": [], "source": []}
-            for i in pdf_batch["id"]:
-                i = int(i)
-                if large_every and i % large_every == 0:
-                    name, content = large(i)
-                else:
-                    name, content = small(i)
-                rows["doc_id"].append(f"{name}-{i:09d}")
-                rows["content"].append(content)
-                rows["byte_len"].append(len(content))
-                rows["source"].append(name)
-            yield pd.DataFrame(rows)
-
-    return (
-        spark.range(n_docs)
-        .repartition(num_partitions)
-        .mapInPandas(gen, RAW_DOCS_SCHEMA)
-    )
+    ids = spark.range(n_docs).repartition(num_partitions)
+    return map_documents(ids, gen, to_arrow_schema(RAW_DOCS_SCHEMA))
 
 
 def synthetic_html_corpus_df(
@@ -156,39 +129,27 @@ def synthetic_html_corpus_df(
     the input for the boilerplate-strip throughput bench."""
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    from ..html_fixtures import FAMILIES, make_large_page
 
-    def gen(batches):
-        import pandas as pd
+    fams = sorted(FAMILIES)
+    cache: dict = {}
 
-        from ..html_fixtures import FAMILIES, make_large_page
+    def gen(i):
+        if i % 4 == 0:
+            n_paras = paras[(i // 4) % len(paras)]
+            key = f"large{n_paras}-{i % 16}"
+            if key not in cache:
+                cache[key] = make_large_page(n_paras, seed=i % 16)
+            name, html = f"large{n_paras}", cache[key]
+        else:
+            name = fams[i % len(fams)]
+            if name not in cache:
+                cache[name] = FAMILIES[name]()[0]
+            html = cache[name]
+        yield f"{name}-{i:09d}", html
 
-        fams = sorted(FAMILIES)
-        cache: dict = {}
-
-        for b in batches:
-            rows = {"doc_id": [], "html": []}
-            for i in b["id"]:
-                i = int(i)
-                if i % 4 == 0:
-                    n_paras = paras[(i // 4) % len(paras)]
-                    key = f"large{n_paras}-{i % 16}"
-                    if key not in cache:
-                        cache[key] = make_large_page(n_paras, seed=i % 16)
-                    name, html = f"large{n_paras}", cache[key]
-                else:
-                    name = fams[i % len(fams)]
-                    if name not in cache:
-                        cache[name] = FAMILIES[name]()[0]
-                    html = cache[name]
-                rows["doc_id"].append(f"{name}-{i:09d}")
-                rows["html"].append(html)
-            yield pd.DataFrame(rows)
-
-    return (
-        spark.range(n_docs)
-        .repartition(num_partitions)
-        .mapInPandas(gen, "doc_id string, html string")
-    )
+    ids = spark.range(n_docs).repartition(num_partitions)
+    return map_documents(ids, gen, pa.schema([("doc_id", pa.string()), ("html", pa.string())]))
 
 
 def read_pdf_dir(spark: SparkSession, path: str) -> DataFrame:

@@ -12,23 +12,24 @@ Format recap (all that matters for ingest):
   response records' block = full HTTP response (status line, headers,
   CRLF CRLF, body).
 
-Scale shape: one WARC file is one binary row; `warc_records` is a
-mapInPandas stage over (warc_id, payload) with the same hash-spread
-salting as the PDF path — per-record parsing never crosses an exchange,
-and a malformed tail degrades to the rows parsed so far plus a tagged
-error row (a 100 TB crawl cannot die on one truncated archive).
-Downstream the extracted HTTP bodies feed html_main / the extraction
-UDFs directly.
+Scale shape: one WARC file is one binary row; `warc_records` is one
+per-archive Arrow stage (``map_documents``) over (warc_id, payload) with
+the same hash-spread salting as the PDF path — per-record parsing never
+crosses an exchange, and a malformed tail degrades to the rows parsed so
+far plus a tagged error row (a 100 TB crawl cannot die on one truncated
+archive; a NULL payload is one error row).  Downstream the extracted HTTP
+bodies feed html_main / the extraction UDFs directly.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.extraction import map_documents
 
 _CRLF = b"\r\n"
 
@@ -82,6 +83,13 @@ def make_warc(records: "list[tuple[str, str, str, bytes]]",
     return bytes(out)
 
 
+def _error_record(idx: int, error: str) -> dict:
+    """The error-tagged record that ends a scan at archive position idx."""
+    return {"rec_index": idx, "record_type": "", "target_uri": "",
+            "record_id": "", "content_type": "", "http_status": 0,
+            "body": b"", "error": error}
+
+
 def parse_warc(payload: bytes) -> "list[dict]":
     """Pure kernel: WARC bytes -> record dicts (rec_index, record_type,
     target_uri, record_id, content_type, http_status, body:bytes,
@@ -99,10 +107,7 @@ def parse_warc(payload: bytes) -> "list[dict]":
             break
         end_head = payload.find(_CRLF + _CRLF, pos)
         if not payload.startswith(b"WARC/", pos) or end_head < 0:
-            rows.append({"rec_index": idx, "record_type": "", "target_uri": "",
-                         "record_id": "", "content_type": "",
-                         "http_status": 0, "body": b"",
-                         "error": "bad record header"})
+            rows.append(_error_record(idx, "bad record header"))
             break
         headers: dict[str, str] = {}
         for line in payload[pos:end_head].split(_CRLF)[1:]:
@@ -119,18 +124,12 @@ def parse_warc(payload: bytes) -> "list[dict]":
         if length < 0:
             # absent OR negative: a negative length would move the scan
             # position backwards and loop forever on a corrupt record
-            rows.append({"rec_index": idx, "record_type": "", "target_uri": "",
-                         "record_id": "", "content_type": "",
-                         "http_status": 0, "body": b"",
-                         "error": "missing content-length"})
+            rows.append(_error_record(idx, "missing content-length"))
             break
         block_start = end_head + 4
         block = payload[block_start:block_start + length]
         if len(block) < length:
-            rows.append({"rec_index": idx, "record_type": "", "target_uri": "",
-                         "record_id": "", "content_type": "",
-                         "http_status": 0, "body": b"",
-                         "error": "truncated block"})
+            rows.append(_error_record(idx, "truncated block"))
             break
         rtype = headers.get("warc-type", "")
         ctype = headers.get("content-type", "")
@@ -164,34 +163,24 @@ def parse_warc(payload: bytes) -> "list[dict]":
     return rows
 
 
-WARC_SCHEMA = (
-    "warc_id string, rec_index long, record_type string, target_uri string,"
-    " record_id string, content_type string, http_status long,"
-    " byte_len long, body_sha256 string, body binary, error string"
-)
+_WARC_SCHEMA = pa.schema([
+    ("warc_id", pa.string()), ("rec_index", pa.int64()),
+    ("record_type", pa.string()), ("target_uri", pa.string()),
+    ("record_id", pa.string()), ("content_type", pa.string()),
+    ("http_status", pa.int64()), ("byte_len", pa.int64()),
+    ("body_sha256", pa.string()), ("body", pa.binary()), ("error", pa.string()),
+])
 
 
-def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        cols: dict[str, list] = {k: [] for k in (
-            "warc_id", "rec_index", "record_type", "target_uri", "record_id",
-            "content_type", "http_status", "byte_len", "body_sha256", "body",
-            "error")}
-        for warc_id, payload in zip(pdf["warc_id"], pdf["payload"]):
-            data = bytes(payload) if payload is not None else b""
-            for r in parse_warc(data):
-                cols["warc_id"].append(warc_id)
-                cols["rec_index"].append(r["rec_index"])
-                cols["record_type"].append(r["record_type"])
-                cols["target_uri"].append(r["target_uri"])
-                cols["record_id"].append(r["record_id"])
-                cols["content_type"].append(r["content_type"])
-                cols["http_status"].append(r["http_status"])
-                cols["byte_len"].append(len(r["body"]))
-                cols["body_sha256"].append(hashlib.sha256(r["body"]).hexdigest())
-                cols["body"].append(r["body"])
-                cols["error"].append(r["error"])
-        yield pd.DataFrame(cols)
+def _warc_kernel(warc_id, payload):
+    """One archive -> its records.  A NULL payload is one error record (it
+    must reach the record-level accounting); an empty archive has none."""
+    records = [_error_record(0, "null payload")] if payload is None else parse_warc(payload)
+    for r in records:
+        body = r["body"]
+        yield (warc_id, r["rec_index"], r["record_type"], r["target_uri"],
+               r["record_id"], r["content_type"], r["http_status"], len(body),
+               hashlib.sha256(body).hexdigest(), body, r["error"])
 
 
 def warc_records(warcs: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -201,11 +190,8 @@ def warc_records(warcs: DataFrame, num_partitions: int | None = None) -> DataFra
     spark = warcs.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (
-        warcs.repartition(num_partitions, F.xxhash64("warc_id"))
-        .select("warc_id", "payload")
-        .mapInPandas(_warc_batches, WARC_SCHEMA)
-    )
+    arcs = warcs.repartition(num_partitions, F.xxhash64("warc_id")).select("warc_id", "payload")
+    return map_documents(arcs, _warc_kernel, _WARC_SCHEMA)
 
 
 def warc_fixture_spec() -> "list[tuple[str, str, str, bytes]]":

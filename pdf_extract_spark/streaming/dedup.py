@@ -78,7 +78,7 @@ def dedup_media_stream(
     per 64-bit difference hash wins, so exact re-deliveries AND
     re-encodes of the same pixels (a PNG of a previously seen image —
     dhash is pixel-derived, hamming 0) are dropped at ingest.  The
-    dhash kernel is a mapInPandas stage and streams as-is.
+    dhash kernel is a per-row Arrow stage and streams as-is.
 
     Stub-tier rows (undecodable payloads, dhash NULL) are never
     collapsed with each other: their dedup key falls back to the

@@ -131,7 +131,7 @@ def test_synthetic_html_corpus_extracts(spark):
 
 def test_streaming_html_main_content(spark, tmp_path):
     """The boilerplate-strip stage runs unchanged under Structured
-    Streaming (stateless mapInPandas): availableNow file stream over the
+    Streaming (stateless mapInArrow): availableNow file stream over the
     HTML corpus -> same spans as the batch run."""
     from pdf_extract_spark.html_main import extract_main_content
     from pdf_extract_spark.sources.raw_docs import synthetic_html_corpus_df

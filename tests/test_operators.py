@@ -132,6 +132,18 @@ def test_document_stats_shapes(spark):
     assert out[1]["fingerprint"] == out[2]["fingerprint"]
 
 
+def test_document_stats_lang_pred_is_langid(spark):
+    """doc_stats and doc_langid share one language-ID algorithm: 'la' is in
+    the French profile and 'in' in the English one."""
+    from pdf_extract_spark.functions.langid import identify_language
+
+    docs = spark.createDataFrame([(1, "la la in"), (2, "Der Hund und das")],
+                                 "doc_id long, text string")
+    stats = {r["doc_id"]: r["lang_pred"] for r in document_stats(docs).collect()}
+    ids = {r["doc_id"]: r["lang_pred"] for r in identify_language(docs).collect()}
+    assert stats == ids == {1: "fr", 2: "de"}
+
+
 def test_media_features_deterministic(spark):
     rows = [("m1", "image", b"\x01\x02\x03"), ("m2", "image", b"\x01\x02\x03"), ("m3", "image", b"other")]
     media = spark.createDataFrame(rows, "media_id string, media_kind string, payload binary")

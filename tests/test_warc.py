@@ -74,6 +74,18 @@ def test_spark_stage_matches_kernel(spark):
     assert len(got) == sum(len(parse_warc(p)) for _, p in arcs)
 
 
+def test_null_payload_is_one_error_row(spark):
+    """A NULL archive is one error row the record-level accounting can
+    count; an empty archive holds no records."""
+    df = spark.createDataFrame(
+        [("null", None), ("empty", b"")], "warc_id string, payload binary"
+    )
+    rows = warc_records(df, num_partitions=2).collect()
+    assert [(r["warc_id"], r["rec_index"], r["error"], r["byte_len"]) for r in rows] == [
+        ("null", 0, "null payload", 0)
+    ]
+
+
 def test_negative_content_length_terminates():
     """A corrupt negative Content-Length must yield one error row, not
     an infinite re-parse of the same header (review-found hang)."""
