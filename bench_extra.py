@@ -1,12 +1,13 @@
 """Ad-hoc per-query timing harness for the optimization rounds (bench.py
 is frozen for measurement; this file is for isolating and iterating).
 
-Usage: python bench_extra.py [-n REPS] [--noop] query [query ...]
+Usage: python bench_extra.py [-n REPS] query [query ...]
        python bench_extra.py --plans OUTDIR [query ...]
-Times each named registry query with the same min-of-N count() protocol
-as bench.py, after the same warm-up, and prints one line per query.
-`--noop` forces full-column evaluation through the noop sink instead of
-count() (guide §1.4).  `--plans` times nothing: it writes each query's
+Times each named registry query, min of REPS runs after bench.py's
+warm-up, and prints one line per query.  Each run writes the query's
+frame through the noop sink, so every output column is computed: a
+`count()` would let Catalyst prune computed columns and time only the
+scan.  `--plans` times nothing: it writes each query's
 `explain('formatted')` plan to OUTDIR/<query>.txt, for bench.py's
 headline set when no names are given.
 """
@@ -41,7 +42,6 @@ def dump_plans(spark, sf_dir: str, outdir: str, names: list[str]) -> None:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("-n", type=int, default=2)
-    ap.add_argument("--noop", action="store_true")
     ap.add_argument("--plans", metavar="OUTDIR")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
@@ -66,11 +66,7 @@ def main() -> None:
         samples = []
         for _ in range(args.n):
             t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            if args.noop:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
             _unpersist_all(spark)
         print(f"{min(samples):7.3f}  {name}  samples={samples}")

@@ -271,24 +271,26 @@ def ngram_jaccard_pairs(
 _SHIFTS = np.arange(64, dtype=np.uint64)
 
 
-def _simhash_value(text, cache: dict[str, int]) -> int:
+def _simhash_value(text, cache: dict[str, int]) -> int | None:
     """Signed 64-bit simhash of one text: md5 once per UNIQUE token (kept
     in `cache` across documents), accumulation as one (uniq_tokens x 64)
     numpy matmul weighted by token counts — identical output to the
-    per-token loop it replaces, ~10x fewer hash calls on natural text."""
-    toks = str(text).lower().split()
-    if toks:
-        uniq, counts = np.unique(np.array(toks, dtype=object), return_counts=True)
-        hs = np.empty(len(uniq), dtype=np.uint64)
-        for i, tok in enumerate(uniq):
-            h = cache.get(tok)
-            if h is None:
-                h = cache[tok] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
-            hs[i] = h
-        bits = ((hs[:, None] >> _SHIFTS[None, :]) & np.uint64(1)).astype(np.int64)
-        acc = ((bits * 2 - 1) * counts[:, None].astype(np.int64)).sum(axis=0)
-    else:
-        acc = np.zeros(64, dtype=np.int64)
+    per-token loop it replaces, ~10x fewer hash calls on natural text.
+    NULL, empty or whitespace-only text has no tokens and no simhash
+    (NULL), so it pairs with nothing — as in SIMHASH_SQL, which drops
+    such documents."""
+    toks = (text or "").lower().split()
+    if not toks:
+        return None
+    uniq, counts = np.unique(np.array(toks, dtype=object), return_counts=True)
+    hs = np.empty(len(uniq), dtype=np.uint64)
+    for i, tok in enumerate(uniq):
+        h = cache.get(tok)
+        if h is None:
+            h = cache[tok] = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")
+        hs[i] = h
+    bits = ((hs[:, None] >> _SHIFTS[None, :]) & np.uint64(1)).astype(np.int64)
+    acc = ((bits * 2 - 1) * counts[:, None].astype(np.int64)).sum(axis=0)
     sim = int(((acc > 0).astype(np.uint64) << _SHIFTS).sum())
     return sim - (1 << 64) if sim >= (1 << 63) else sim
 

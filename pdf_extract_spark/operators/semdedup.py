@@ -30,9 +30,9 @@ driver collect (512 MiB guard).  Everything else is narrow.
 
 Float determinism: the ASSIGN pass sees whatever row batches Arrow
 delivers, so its kernels must be batch-shape-independent — cell
-distances use a fixed-order einsum SOP loop (never BLAS GEMM, whose
-kernel choice varies with M), and cent_sim/norms are per-row pairwise
-reductions over the fixed dim axis.  The PRUNE pass operates on whole
+distances use the fixed-order einsum SOP loop of `similarity._nearest`
+(never BLAS GEMM, whose kernel choice varies with M), and cent_sim/norms
+are per-row pairwise reductions over the fixed dim axis.  The PRUNE pass operates on whole
 cells in a pinned sort order, so engine and oracle GEMMs have identical
 shapes and contents there and are bit-identical on the same BLAS.
 Outputs are additionally floor-quantized to x1e6 longs so the driver's
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import train_centroids
+from .similarity import _nearest, train_centroids
 
 # blockwise prefix-max GEMM width — part of the pinned spec (the oracle
 # replicates it; same shapes => same BLAS => bit-identical floats)
@@ -78,7 +78,6 @@ def semantic_dedup(
         import pandas as pd
 
         C, Cn = bc.value
-        c2 = (C * C).sum(axis=1)
         for pdf in batches:
             if not len(pdf):
                 yield pd.DataFrame(
@@ -86,14 +85,9 @@ def semantic_dedup(
                 )
                 continue
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            # einsum (no optimize) instead of GEMM: the SOP loop sums
-            # over j in fixed index order PER OUTPUT ELEMENT, so the
-            # result for a row is independent of how many rows share the
-            # Arrow batch — BLAS dgemm kernel selection varies with M
-            # and could flip a near-tied argmin between layouts
-            cells = (
-                c2[None, :] - 2.0 * np.einsum("ij,kj->ik", mat, C)
-            ).argmin(axis=1)
+            # _nearest: the batch-shape-independent einsum kernel, never
+            # BLAS GEMM, so a near-tied argmin cannot flip between layouts
+            cells = _nearest(mat, C)
             norms = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
             matn = mat / np.where(norms == 0.0, 1.0, norms)
             cent_sim = (matn * Cn[cells]).sum(axis=1)

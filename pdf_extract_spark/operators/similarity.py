@@ -1,19 +1,39 @@
 """Similarity search over an embedding column (array<float>).
 
-Two paths:
-  * brute-force cosine top-k — exact baseline.  Broadcast the (small) query
-    set against the full corpus; dot products via zip_with/aggregate HOFs
-    (JVM-side, codegen) in double precision.
-  * LSH-bucketed ANN — signed-random-projection signatures computed from a
+Six paths, each returning (query_id, nbr_id, rank) per query except the
+all-pairs join:
+  * brute_force_topk — exact cosine top-k baseline.  Broadcast the (small)
+    query set against the full corpus; dot products via zip_with/aggregate
+    HOFs (JVM-side, codegen) in double precision.
+  * all_pairs_cosine — exact all-pairs near-dup pairs as a distributed
+    block-nested-loop matrix multiply.
+  * lsh_topk — signed-random-projection ANN: signatures from a
     deterministic md5-seeded hyperplane family (no RNG state to ship),
-    candidates restricted to matching buckets, exact re-rank inside.  The
-    scale path: bucket join instead of cross join.
+    candidates restricted to matching buckets, exact re-rank inside.
+  * ivf_topk — inverted file: sampled k-means cells, each query probes
+    its nearest cells, exact re-rank.
+  * pq_topk / ivfpq_topk — product-quantization ADC over codes, one search
+    core (_pq_search): flat PQ is IVF-PQ with one zero coarse centroid.
+
+Shared pieces: one bounded training sample and Lloyd kernel, one
+batch-shape-independent nearest-centroid kernel (_nearest, also used by
+operators/semdedup.py), one driver-side probe pick and one per-query
+top-k tail.
 """
 
 from __future__ import annotations
 
+import itertools
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# lsh_topk's recall amplification, pinned by the DuckDB oracle ANN_LSH_SQL
+# (queries.py): plane families OR-ed together, and the Hamming radius each
+# query also probes around its own bucket
+LSH_TABLES = 8
+LSH_MULTIPROBE = 1
 
 
 def _dot(a, b):
@@ -34,6 +54,53 @@ def cosine_similarity_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _f64(vec):
+    return F.transform(vec, lambda x: x.cast("double"))
+
+
+def _top_k(
+    scored: DataFrame, k: int, score: str = "cos", ascending: bool = False
+) -> DataFrame:
+    """Per query, the k best rows of (query_id, nbr_id, score) ranked
+    1..k: best score first, ties to the lower nbr_id."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("nbr_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "nbr_id", F.col("rank").cast("long").alias("rank"))
+    )
+
+
+def _nearest(x, cent, n: int | None = None):
+    """Index of each row's nearest row of `cent` by squared L2 — or, given
+    `n`, its n nearest in stable order (near ties, e.g. a stale centroid
+    of an emptied Lloyd cluster, order identically everywhere).
+
+    argmin ||v-c||^2 = argmin (|c|^2 - 2 v.c), with a fixed-order einsum
+    SOP loop rather than BLAS GEMM: a row's result must not depend on how
+    many rows share its Arrow batch (dgemm kernel choice varies with M and
+    can flip a near-tied argmin between layouts, or against a golden)."""
+    d = (cent * cent).sum(axis=1)[None, :] - 2.0 * np.einsum("ij,kj->ik", x, cent)
+    if n is None:
+        return d.argmin(axis=1)
+    return d.argsort(axis=1, kind="stable")[:, :n]
+
+
+def _probe(emb: DataFrame, query_ids: list[int], cent, n_probe: int,
+           id_col: str, vec_col: str):
+    """Collect the query rows (bounded: |query_ids| rows) and pick each
+    query's `n_probe` nearest cells on the driver.  Returns the rows, their
+    (nq, dim) float64 matrix and the (nq, n_probe) cell ids."""
+    rows = (
+        emb.filter(F.col(id_col).isin(query_ids)).select(id_col, vec_col).collect()
+    )
+    qmat = np.array([r[1] for r in rows], dtype=np.float64).reshape(
+        len(rows), cent.shape[1]
+    )
+    return rows, qmat, _nearest(qmat, cent, n_probe)
+
+
 def brute_force_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -46,7 +113,7 @@ def brute_force_topk(
     query side stays broadcast as long as |queries| is small."""
     vecs = emb.select(
         F.col(id_col).alias("nbr_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        _f64(F.col(vec_col)).alias("v"),
     )
     queries = vecs.filter(F.col("nbr_id").isin(query_ids)).select(
         F.col("nbr_id").alias("query_id"), F.col("v").alias("q")
@@ -60,12 +127,7 @@ def brute_force_topk(
             cosine_similarity_col(F.col("q"), F.col("v")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k(scored, k)
 
 
 def all_pairs_cosine(
@@ -91,7 +153,6 @@ def all_pairs_cosine(
     kernel re-ranks candidate blocks.  A row-pair equi/theta join with
     per-pair HOF folds is ~100x slower (measured: hang at 2k vectors vs
     seconds here)."""
-    import numpy as np
     import pandas as pd
 
     B = int(num_blocks)
@@ -200,8 +261,6 @@ def _train_sample(
     trainer — ONE definition so the coarse, PQ, and IVF-PQ paths can
     never drift, and callers that need both quantizers collect it
     once."""
-    import numpy as np
-
     total = emb.count()
     frac_pct = max(1, min(100, int(100 * train_cap / max(total, 1))))
     sample = (
@@ -226,8 +285,8 @@ def _train_sample(
 
 def _coarse_lloyd(train, n_centroids: int):
     """First-k-init 10-iteration float64 Lloyd over the sample matrix
-    (the coarse-quantizer kernel shared by train_centroids and
-    ivfpq_topk)."""
+    (the quantizer kernel shared by train_centroids, ivfpq_topk and every
+    PQ subspace)."""
     cent = train[:n_centroids].copy()
     for _ in range(10):
         # argmin ||v-c||^2 = argmin (|c|^2 - 2 v.c): (n,K) temporaries only,
@@ -286,16 +345,15 @@ def ivf_topk(
        The centroid matrix is tiny (n_centroids x dim) and broadcast.
     2. ASSIGN: every vector gets cell = argmin ||v - c||, vectorized numpy
        inside mapInPandas — one narrow pass, no shuffle.
-    3. SEARCH: each query probes its `n_probe` nearest cells; candidates
-       are fetched by an equi-join on cell id (the piece that replaces the
+    3. SEARCH: each query probes its `n_probe` nearest cells, picked on
+       the driver (_probe: a bounded |query_ids| collect); candidates are
+       fetched by an equi-join on cell id (the piece that replaces the
        full scan) and re-ranked exactly; per-query top-k window.
 
     Recall is governed by n_probe/n_centroids (gated >= 0.8 in
     tests/test_operators.py on the synthetic table).  Unlike SRP-LSH the
     cells adapt to the data distribution, so clustered corpora get high
     recall at a small probe fraction."""
-    import numpy as np
-
     spark = emb.sparkSession
     # -- 1. deterministic bounded sample -> driver-side Lloyd iterations
     cent = train_centroids(
@@ -307,26 +365,16 @@ def ivf_topk(
     def assign_cells(batches):
         import pandas as pd
 
-        C = bc.value
-        c2 = (C * C).sum(axis=1)
         for pdf in batches:
             if not len(pdf):
                 yield pd.DataFrame({"nbr_id": [], "v": [], "cell": []})
                 continue
             mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            # argmin ||v-c||^2 = argmin (|c|^2 - 2 v.c); fixed-order
-            # einsum SOP loop, not BLAS GEMM — per-row results must not
-            # depend on how many rows share the Arrow batch (dgemm
-            # kernel choice varies with M and can flip a near-tied
-            # argmin between layouts / vs the full-matrix golden)
-            cells = (
-                c2[None, :] - 2.0 * np.einsum("ij,kj->ik", mat, C)
-            ).argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "nbr_id": pdf[id_col],
                     "v": pdf[vec_col],
-                    "cell": cells.astype("int32"),
+                    "cell": _nearest(mat, bc.value).astype("int32"),
                 }
             )
 
@@ -336,42 +384,11 @@ def ivf_topk(
         assign_cells, f"nbr_id {id_type}, v {vec_type}, cell int"
     )
 
-    # -- 3. probe lists per query (driver computes n_probe cells per query
-    # from the SAME broadcast centroids — no extra Spark job)
-    queries = (
-        cells.filter(F.col("nbr_id").isin(query_ids))
-        .select(F.col("nbr_id").alias("query_id"), F.col("v").alias("q"))
-    )
-    # q's probe cells are computed JVM-free inside the join below by
-    # exploding the top-n_probe cells, evaluated in a tiny pandas UDF pass
-    def probe_cells(batches):
-        import pandas as pd
-
-        C = bc.value
-        c2 = (C * C).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({"query_id": [], "q": [], "cell": []})
-                continue
-            mat = np.array(list(pdf["q"]), dtype=np.float64)
-            # same batch-shape-independent kernel as assign_cells
-            # stable argsort: near-tied probe distances (possible when
-            # a Lloyd cluster empties and keeps a stale centroid) must
-            # order identically on every platform — same contract
-            # ivfpq_topk defends
-            order = (
-                c2[None, :] - 2.0 * np.einsum("ij,kj->ik", mat, C)
-            ).argsort(axis=1, kind="stable")[:, :n_probe]
-            out = {"query_id": [], "q": [], "cell": []}
-            for i in range(len(pdf)):
-                for c in order[i]:
-                    out["query_id"].append(pdf["query_id"].iloc[i])
-                    out["q"].append(pdf["q"].iloc[i])
-                    out["cell"].append(int(c))
-            yield pd.DataFrame(out)
-
-    probes = queries.mapInPandas(
-        probe_cells, f"query_id {id_type}, q {vec_type}, cell int"
+    # -- 3. one (query_id, q, cell) row per probed cell, broadcast
+    qrows, _, probe = _probe(emb, query_ids, cent, n_probe, id_col, vec_col)
+    probes = spark.createDataFrame(
+        [(r[0], r[1], int(c)) for r, cs in zip(qrows, probe) for c in cs],
+        f"query_id {id_type}, q {vec_type}, cell int",
     )
     scored = (
         cells.join(F.broadcast(probes), "cell")
@@ -379,18 +396,10 @@ def ivf_topk(
         .select(
             "query_id",
             "nbr_id",
-            cosine_similarity_col(
-                F.transform(F.col("q"), lambda x: x.cast("double")),
-                F.transform(F.col("v"), lambda x: x.cast("double")),
-            ).alias("cos"),
+            cosine_similarity_col(_f64(F.col("q")), _f64(F.col("v"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k(scored, k)
 
 
 def lsh_topk(
@@ -409,41 +418,41 @@ def lsh_topk(
 
     Recall amplification (single-table SRP recall collapses on weakly
     clustered embeddings — measured 0.07 on the near-isotropic synthetic
-    table): `n_tables` independent plane families OR-ed together, plus
-    `multiprobe` (Hamming-ball probing: the query also looks in every
-    bucket differing by <= multiprobe bits).  Defaults (6 planes x 8
-    tables x 1-bit probes) hold recall@5 >= 0.8 even on near-random
-    vectors; on genuinely clustered corpora the same settings probe a far
-    smaller candidate fraction.  Candidate volume scales as
-    n_tables * (1 + n_planes * multiprobe) buckets per query — tune DOWN
-    (fewer tables / no probes) when embeddings are well-clustered.
+    table): LSH_TABLES independent plane families OR-ed together, plus
+    Hamming-ball multiprobe (the query also looks in every bucket that
+    differs from its own by <= LSH_MULTIPROBE bits).  These are module
+    constants, not parameters, because the DuckDB oracle ANN_LSH_SQL pins
+    them (6 planes x 8 tables x 1-bit probes by default), which hold
+    recall@5 >= 0.8 even on near-random vectors.  Candidate volume scales
+    as LSH_TABLES * sum_{r <= LSH_MULTIPROBE} C(n_planes, r) buckets per
+    query; `n_planes` is the knob a caller turns.
 
     Pass `dim` (the embedding dimensionality) to keep plan construction
     action-free; when omitted, a LIMIT-1 probe reads it from the data."""
-    n_tables = 8
-    multiprobe = 1
     if dim is None:
         first = emb.select(vec_col).first()
         dim = len(first[0]) if first else 0
     vecs = emb.select(
         F.col(id_col).alias("nbr_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        _f64(F.col(vec_col)).alias("v"),
         F.posexplode(
             F.array(
                 *[
                     srp_bucket(F.col(vec_col), _hyperplanes(dim, n_planes, t))
-                    for t in range(n_tables)
+                    for t in range(LSH_TABLES)
                 ]
             )
         ).alias("tbl", "bucket"),
     )
     base_q = vecs.filter(F.col("nbr_id").isin(query_ids))
-    # multiprobe: each query row also probes the buckets within `multiprobe`
-    # Hamming bits of its own (query-side only — the broadcast side grows,
-    # the corpus side never does)
-    probe_offsets = [0]
-    if multiprobe >= 1:
-        probe_offsets += [1 << b for b in range(n_planes)]
+    # multiprobe: each query row also probes the buckets within
+    # LSH_MULTIPROBE Hamming bits of its own (query-side only — the
+    # broadcast side grows, the corpus side never does)
+    probe_offsets = [
+        sum(1 << b for b in bits)
+        for r in range(LSH_MULTIPROBE + 1)
+        for bits in itertools.combinations(range(n_planes), r)
+    ]
     queries = base_q.select(
         F.col("nbr_id").alias("query_id"),
         F.col("v").alias("q"),
@@ -470,12 +479,7 @@ def lsh_topk(
         "nbr_id",
         cosine_similarity_col(F.col("q"), F.col("v")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.col("rank").cast("long").alias("rank"))
-    )
+    return _top_k(scored, k)
 
 
 def train_pq_codebooks(
@@ -496,32 +500,160 @@ def train_pq_codebooks(
     train = _train_sample(emb, train_cap, id_col, vec_col)
     if len(train) < ksub:
         raise ValueError(f"{len(train)} training vectors < ksub={ksub}")
-    return _pq_lloyd(train, m, ksub)
+    return _pq_codebooks(train, m, ksub)
 
 
-def _pq_lloyd(train, m: int, ksub: int):
-    """Per-subspace first-k-init 10-iteration float64 Lloyd over an
-    (n, dim) matrix -> (m, ksub, dsub) codebooks.  Shared by the flat-PQ
-    and IVF-PQ (residual) trainers."""
-    import numpy as np
-
+def _pq_codebooks(train, m: int, ksub: int):
+    """_coarse_lloyd per subspace of an (n, dim) matrix -> (m, ksub, dsub)
+    codebooks.  Flat PQ trains on the vectors, IVF-PQ on their coarse
+    residuals."""
     dim = train.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    books = np.empty((m, ksub, dsub), dtype=np.float64)
-    for j in range(m):
-        sub = train[:, j * dsub : (j + 1) * dsub]
-        cent = sub[:ksub].copy()
-        for _ in range(10):
-            c2 = (cent * cent).sum(axis=1)
-            assign = (c2[None, :] - 2.0 * (sub @ cent.T)).argmin(axis=1)
-            for c in range(ksub):
-                members = sub[assign == c]
-                if len(members):
-                    cent[c] = members.mean(axis=0)
-        books[j] = cent
-    return books
+    return np.stack(
+        [_coarse_lloyd(train[:, j * dsub : (j + 1) * dsub], ksub) for j in range(m)]
+    )
+
+
+def _pq_search(
+    emb: DataFrame,
+    query_ids: list[int],
+    k: int,
+    cent,
+    books,
+    n_probe: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVFADC search (Jégou et al. 2011), the one scan behind pq_topk and
+    ivfpq_topk: the coarse centroids `cent` route each vector to a cell,
+    the (m, ksub, dsub) `books` quantize its residual v - cent[cell], and
+    a query scans only its `n_probe` nearest cells.  Flat PQ is the case
+    of one zero centroid: the residual is the vector and there is one
+    cell.
+
+    1. ENCODE: one narrow mapInPandas pass emits (nbr_id, cell, codes);
+       _nearest keeps it batch-shape independent.
+    2. ADC TABLES (driver, bounded |query_ids| collect): per query and
+       probed cell, the (m, ksub) squared distances from the query's
+       residual subvectors to every codeword.
+    3. ADC SCAN: every partition of the codes frame emits only its
+       per-partition top-`shortlist` candidates per query (bounded emit:
+       the map-side top-k that makes the scan 100-TB-shaped — never
+       O(N x Q) rows), then one global rank cuts to `shortlist`.  Top-S
+       of the union of per-partition top-S equals the global top-S, ties
+       broken by id.
+    4. EXACT RE-RANK of the shortlist by true cosine (the same JVM fold
+       expression the other ANN paths use), top-k per query."""
+    spark = emb.sparkSession
+    m, ksub, dsub = books.shape
+    bc = spark.sparkContext.broadcast((cent, books))
+
+    def encode(batches):
+        import pandas as pd
+
+        C, B = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                yield pd.DataFrame({"nbr_id": [], "cell": [], "codes": []})
+                continue
+            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
+            cells = _nearest(mat, C)
+            res = mat - C[cells]
+            codes = np.stack(
+                [_nearest(res[:, j * dsub : (j + 1) * dsub], B[j]) for j in range(m)],
+                axis=1,
+            )
+            yield pd.DataFrame(
+                {
+                    "nbr_id": pdf[id_col],
+                    "cell": cells.astype("int32"),
+                    "codes": list(codes),
+                }
+            )
+
+    id_type = emb.schema[id_col].dataType.simpleString()
+    coded = emb.select(id_col, vec_col).mapInPandas(
+        encode, f"nbr_id {id_type}, cell int, codes array<long>"
+    )
+
+    qrows, qmat, probe = _probe(emb, query_ids, cent, n_probe, id_col, vec_col)
+    tables = {}
+    for r, qv, cells in zip(qrows, qmat, probe):
+        tabs = {}
+        for c in cells:
+            diff = books - (qv - cent[c]).reshape(m, 1, dsub)
+            tabs[int(c)] = (diff * diff).sum(axis=2)
+        tables[r[0]] = tabs
+    bt = spark.sparkContext.broadcast(tables)
+
+    def adc_scan(batches):
+        import heapq
+
+        import pandas as pd
+
+        Q = bt.value
+        per_q: dict = {qid: [] for qid in Q}
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            nbrs = pdf["nbr_id"].to_numpy()
+            cells = pdf["cell"].to_numpy()
+            cmat = np.array(list(pdf["codes"]), dtype=np.int64)
+            for qid, tabs in Q.items():
+                for cell, tab in tabs.items():
+                    mask = cells == cell
+                    if not mask.any():
+                        continue
+                    sub = cmat[mask]
+                    # accumulate subspace j in ascending order — the SAME
+                    # float addition order as a per-row sequential loop
+                    # (and the goldens), vectorized across rows
+                    d = tab[0][sub[:, 0]].copy()
+                    for j in range(1, m):
+                        d += tab[j][sub[:, j]]
+                    mn = nbrs[mask]
+                    cand = per_q[qid]
+                    for i in range(len(mn)):
+                        if mn[i] != qid:
+                            cand.append((float(d[i]), mn[i]))
+                    # re-truncate per batch: the buffer stays O(shortlist +
+                    # batch), never O(partition_rows x queries).  nsmallest
+                    # == sorted[:S] on (dist, id) tuples, so results are
+                    # unchanged.
+                    if len(cand) > 4 * shortlist:
+                        per_q[qid] = heapq.nsmallest(shortlist, cand)
+        out = {"query_id": [], "nbr_id": [], "adc": []}
+        for qid, cand in per_q.items():
+            for d, nbr in sorted(cand)[:shortlist]:
+                out["query_id"].append(qid)
+                out["nbr_id"].append(nbr)
+                out["adc"].append(d)
+        yield pd.DataFrame(out)
+
+    short = coded.mapInPandas(
+        adc_scan, f"query_id {id_type}, nbr_id {id_type}, adc double"
+    )
+    short = _top_k(short, shortlist, "adc", ascending=True)
+    qdf = emb.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q")
+    )
+    scored = (
+        short.select("query_id", "nbr_id")
+        .join(
+            emb.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("v")),
+            "nbr_id",
+        )
+        .join(F.broadcast(qdf), "query_id")
+        .select(
+            "query_id",
+            "nbr_id",
+            cosine_similarity_col(_f64(F.col("q")), _f64(F.col("v"))).alias("cos"),
+        )
+    )
+    return _top_k(scored, k)
 
 
 def pq_topk(
@@ -537,144 +669,21 @@ def pq_topk(
 ) -> DataFrame:
     """PQ-ADC ANN top-k — the memory-scale path: vectors live as m
     uint8 codes (8 bytes here vs 256 for the raw float32s), and a query
-    scans CODES, not vectors.
-
-    1. TRAIN driver-side (train_pq_codebooks, bounded + deterministic).
-    2. ENCODE: one narrow mapInPandas pass assigns each subvector its
-       nearest sub-centroid (fixed-order einsum — batch-shape
-       independent, same rationale as ivf_topk's assign_cells).
-    3. ADC SCAN: each query precomputes an (m, ksub) distance table;
-       every partition of the codes frame emits only its per-partition
-       top-`shortlist` candidates per query (bounded emit: the map-side
-       top-k that makes the scan 100-TB-shaped — never O(N x Q) rows),
-       then one global rank cuts to `shortlist`.  Top-S of the union of
-       per-partition top-S equals the global top-S, ties broken by id.
-    4. EXACT RE-RANK of the shortlist by true cosine (the same JVM fold
-       expression the other ANN paths use), top-k per query.
+    scans CODES, not vectors.  Codebooks are trained driver-side
+    (train_pq_codebooks, bounded + deterministic); encode, ADC scan and
+    exact re-rank are _pq_search with one zero coarse centroid, so the
+    residual is the vector itself.
 
     Output (query_id, nbr_id, rank) — same shape as ivf/lsh/brute.
     Recall gated in pytest; oracled against an independent numpy
     reimplementation (tools/gen_golden_pq.py)."""
-    import numpy as np
-
-    spark = emb.sparkSession
     books = train_pq_codebooks(
         emb, m=m, ksub=ksub, train_cap=train_cap,
         id_col=id_col, vec_col=vec_col,
     )
-    bc = spark.sparkContext.broadcast(books)
-    dsub = books.shape[2]
-
-    def encode(batches):
-        import pandas as pd
-
-        B = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({"nbr_id": [], "codes": []})
-                continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            codes = np.empty((len(mat), m), dtype=np.int64)
-            for j in range(m):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                C = B[j]
-                c2 = (C * C).sum(axis=1)
-                codes[:, j] = (
-                    c2[None, :] - 2.0 * np.einsum("ij,kj->ik", sub, C)
-                ).argmin(axis=1)
-            yield pd.DataFrame(
-                {"nbr_id": pdf[id_col], "codes": list(codes)}
-            )
-
-    id_type = emb.schema[id_col].dataType.simpleString()
-    codes = emb.select(id_col, vec_col).mapInPandas(
-        encode, f"nbr_id {id_type}, codes array<long>"
-    )
-
-    qrows = (
-        emb.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )  # bounded: |query_ids| rows
-    qvecs = {r[0]: np.array(r[1], dtype=np.float64) for r in qrows}
-    tables = {}
-    for qid, qv in qvecs.items():
-        T = np.empty((m, ksub), dtype=np.float64)
-        for j in range(m):
-            diff = bc.value[j] - qv[j * dsub : (j + 1) * dsub][None, :]
-            T[j] = (diff * diff).sum(axis=1)
-        tables[qid] = T
-    bt = spark.sparkContext.broadcast(tables)
-
-    def adc_scan(batches):
-        import heapq
-
-        import pandas as pd
-
-        T = bt.value
-        out = {"query_id": [], "nbr_id": [], "adc": []}
-        per_q: dict = {qid: [] for qid in T}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nbrs = pdf["nbr_id"].to_numpy()
-            cmat = np.array(list(pdf["codes"]), dtype=np.int64)
-            for qid, tab in T.items():
-                # accumulate subspace j in ascending order — the SAME
-                # float addition order as a per-row sequential loop
-                # (and the golden), vectorized across rows
-                d = tab[0][cmat[:, 0]].copy()
-                for j in range(1, m):
-                    d += tab[j][cmat[:, j]]
-                cand = per_q[qid]
-                for i in range(len(nbrs)):
-                    if nbrs[i] != qid:
-                        cand.append((float(d[i]), nbrs[i]))
-                # re-truncate per batch: the buffer stays O(shortlist +
-                # batch), never O(partition_rows x queries) — the memory
-                # bound the docstring promises.  nsmallest == sorted[:S]
-                # on (dist, id) tuples, so results are unchanged.
-                if len(cand) > 4 * shortlist:
-                    per_q[qid] = heapq.nsmallest(shortlist, cand)
-        for qid, cand in per_q.items():
-            for d, nbr in sorted(cand)[:shortlist]:
-                out["query_id"].append(qid)
-                out["nbr_id"].append(nbr)
-                out["adc"].append(d)
-        yield pd.DataFrame(out)
-
-    short = codes.mapInPandas(
-        adc_scan, f"query_id {id_type}, nbr_id {id_type}, adc double"
-    )
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.asc("adc"), F.asc("nbr_id")
-    )
-    short = (
-        short.withColumn("srank", F.row_number().over(w_s))
-        .filter(F.col("srank") <= shortlist)
-        .select("query_id", "nbr_id")
-    )
-    qdf = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q")
-    )
-    scored = (
-        short.join(emb.select(F.col(id_col).alias("nbr_id"),
-                              F.col(vec_col).alias("v")), "nbr_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            cosine_similarity_col(
-                F.transform(F.col("q"), lambda x: x.cast("double")),
-                F.transform(F.col("v"), lambda x: x.cast("double")),
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.col("rank").cast("long").alias("rank"))
+    flat = np.zeros((1, m * books.shape[2]))
+    return _pq_search(
+        emb, query_ids, k, flat, books, 1, shortlist, id_col, vec_col
     )
 
 
@@ -699,163 +708,19 @@ def ivfpq_topk(
     cells' codes with a per-cell ADC table built from the query's own
     residual.
 
-    Distributed shape: coarse + PQ training are one bounded driver
-    sample (the shared deterministic Lloyd kernels); encoding is one
-    narrow mapInPandas pass emitting (cell, codes); the scan filters
-    to probed cells BEFORE computing distances and emits only
-    per-partition top-`shortlist` per query; exact cosine re-rank
-    finishes.  Output (query_id, nbr_id, rank) like its siblings.
-    Oracled against an independent numpy reimplementation
-    (tools/gen_golden_ivfpq.py); recall gated in pytest."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    # ONE sample collect feeds BOTH quantizers (the coarse Lloyd and
-    # the residual PQ codebooks) — byte-identical to training each on
-    # its own collect of the same deterministic sample, at half the
-    # corpus scans
+    Coarse and PQ training share ONE bounded driver sample (the same
+    deterministic Lloyd kernel, at half the corpus scans of training
+    each on its own collect); the search is _pq_search.  Output
+    (query_id, nbr_id, rank) like its siblings.  Oracled against an
+    independent numpy reimplementation (tools/gen_golden_ivfpq.py);
+    recall gated in pytest."""
     train = _train_sample(emb, train_cap, id_col, vec_col)
     if len(train) < max(n_centroids, ksub):
         raise ValueError(
             f"{len(train)} training vectors < max(n_centroids, ksub)"
         )
     cent = _coarse_lloyd(train, n_centroids)
-    c2t = (cent * cent).sum(axis=1)
-    tcells = (
-        c2t[None, :] - 2.0 * np.einsum("ij,kj->ik", train, cent)
-    ).argmin(axis=1)
-    books = _pq_lloyd(train - cent[tcells], m, ksub)
-    bc = spark.sparkContext.broadcast((cent, books))
-    dsub = books.shape[2]
-
-    def encode(batches):
-        import pandas as pd
-
-        C, B = bc.value
-        c2 = (C * C).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame({"nbr_id": [], "cell": [], "codes": []})
-                continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cells = (
-                c2[None, :] - 2.0 * np.einsum("ij,kj->ik", mat, C)
-            ).argmin(axis=1)
-            res = mat - C[cells]
-            codes = np.empty((len(mat), m), dtype=np.int64)
-            for j in range(m):
-                sub = res[:, j * dsub : (j + 1) * dsub]
-                Bj = B[j]
-                b2 = (Bj * Bj).sum(axis=1)
-                codes[:, j] = (
-                    b2[None, :] - 2.0 * np.einsum("ij,kj->ik", sub, Bj)
-                ).argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "nbr_id": pdf[id_col],
-                    "cell": cells.astype("int32"),
-                    "codes": list(codes),
-                }
-            )
-
-    id_type = emb.schema[id_col].dataType.simpleString()
-    coded = emb.select(id_col, vec_col).mapInPandas(
-        encode, f"nbr_id {id_type}, cell int, codes array<long>"
-    )
-
-    qrows = (
-        emb.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    cent2 = (cent * cent).sum(axis=1)
-    qmeta = {}
-    for r in qrows:
-        qv = np.array(r[1], dtype=np.float64)
-        order = (
-            cent2 - 2.0 * np.einsum("j,kj->k", qv, cent)
-        ).argsort(kind="stable")[:n_probe]
-        tabs = {}
-        for c in order:
-            qres = qv - cent[c]
-            T = np.empty((m, ksub), dtype=np.float64)
-            for j in range(m):
-                diff = books[j] - qres[j * dsub : (j + 1) * dsub][None, :]
-                T[j] = (diff * diff).sum(axis=1)
-            tabs[int(c)] = T
-        qmeta[r[0]] = tabs
-    bq = spark.sparkContext.broadcast(qmeta)
-
-    def adc_scan(batches):
-        import heapq
-
-        import pandas as pd
-
-        Q = bq.value
-        per_q: dict = {qid: [] for qid in Q}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nbrs = pdf["nbr_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            cmat = np.array(list(pdf["codes"]), dtype=np.int64)
-            for qid, tabs in Q.items():
-                for cell, tab in tabs.items():
-                    mask = cells == cell
-                    if not mask.any():
-                        continue
-                    sub = cmat[mask]
-                    # ascending-j accumulation: same float order as the
-                    # per-row sequential loop and the golden
-                    d = tab[0][sub[:, 0]].copy()
-                    for j in range(1, m):
-                        d += tab[j][sub[:, j]]
-                    mn = nbrs[mask]
-                    cand = per_q[qid]
-                    for i in range(len(mn)):
-                        if mn[i] != qid:
-                            cand.append((float(d[i]), mn[i]))
-                    # same per-batch re-truncation bound as pq_topk
-                    if len(cand) > 4 * shortlist:
-                        per_q[qid] = heapq.nsmallest(shortlist, cand)
-        out = {"query_id": [], "nbr_id": [], "adc": []}
-        for qid, cand in per_q.items():
-            for d, nbr in sorted(cand)[:shortlist]:
-                out["query_id"].append(qid)
-                out["nbr_id"].append(nbr)
-                out["adc"].append(d)
-        yield pd.DataFrame(out)
-
-    short = coded.mapInPandas(
-        adc_scan, f"query_id {id_type}, nbr_id {id_type}, adc double"
-    )
-    w_s = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("nbr_id"))
-    short = (
-        short.withColumn("srank", F.row_number().over(w_s))
-        .filter(F.col("srank") <= shortlist)
-        .select("query_id", "nbr_id")
-    )
-    qdf = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q")
-    )
-    scored = (
-        short.join(
-            emb.select(F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("v")),
-            "nbr_id",
-        )
-        .join(F.broadcast(qdf), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            cosine_similarity_col(
-                F.transform(F.col("q"), lambda x: x.cast("double")),
-                F.transform(F.col("v"), lambda x: x.cast("double")),
-            ).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", F.col("rank").cast("long").alias("rank"))
+    books = _pq_codebooks(train - cent[_nearest(train, cent)], m, ksub)
+    return _pq_search(
+        emb, query_ids, k, cent, books, n_probe, shortlist, id_col, vec_col
     )

@@ -3279,8 +3279,9 @@ def ann_recall(spark, sf_dir):
 
 
 # Full DuckDB reimplementation of SRP-LSH ANN top-k
-# (operators/similarity.py:lsh_topk with the queries.py pinned parameters:
-# query_ids 0..9, k=5, n_planes=6, n_tables=8, multiprobe=1, dim=64).
+# (operators/similarity.py:lsh_topk with the queries.py pinned parameters
+# query_ids 0..9, k=5, n_planes=6, dim=64 and the module constants
+# LSH_TABLES=8, LSH_MULTIPROBE=1).
 # The md5-derived hyperplane family is engine-independent by design
 # (similarity.py:_hyperplanes), so the whole pipeline — plane generation,
 # signed-projection buckets, 1-bit Hamming multiprobe, candidate equi-join,

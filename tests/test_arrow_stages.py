@@ -212,3 +212,28 @@ def test_per_row_python_stages_use_map_documents():
         "per-row Python stages go through operators/extraction.map_documents; "
         f"hand-written batch loops found: {stray}"
     )
+
+
+# MapInPandas stages per ANN plan (and the knobs that fit a 64 x 16 table):
+# IVF assigns cells; PQ and IVF-PQ share one encoder and one ADC scan (flat
+# PQ is IVF-PQ with one zero centroid).
+ANN_STAGES = {
+    "ivf_topk": (1, {"n_centroids": 4, "n_probe": 2}),
+    "pq_topk": (2, {"m": 8, "ksub": 4}),
+    "ivfpq_topk": (2, {"n_centroids": 4, "n_probe": 2, "m": 8, "ksub": 4}),
+}
+
+
+@pytest.mark.parametrize("name", sorted(ANN_STAGES))
+def test_ann_plan_stage_count(spark, name):
+    from pdf_extract_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(16)]) for i in range(64)],
+        "vec_id long, embedding array<float>",
+    )
+    stages, knobs = ANN_STAGES[name]
+    df = getattr(similarity, name)(emb, query_ids=[0, 1], k=3, **knobs)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") == stages, plan
+    assert df.count() == 6

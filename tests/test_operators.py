@@ -81,6 +81,18 @@ def test_simhash_near_pairs(spark):
     assert (1, 4) not in pairs and (1, 5) not in pairs
 
 
+def test_simhash_null_or_tokenless_text_is_null(spark):
+    from pdf_extract_spark.operators.dedup import simhash
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, "None"), (3, ""), (4, "  ")], "doc_id long, text string"
+    )
+    out = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
+    assert out[2] is not None
+    assert [out[d] for d in (1, 3, 4)] == [None, None, None]
+    assert simhash_near_pairs(docs, max_hamming=64).count() == 0
+
+
 def _emb(spark, n=40, dim=8):
     import random
 

@@ -1,6 +1,7 @@
 """Spark-side extraction pipeline tests: distributed correctness, resume,
 lineage/metrics, sink layout."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extract_spark.operators.extraction import (
@@ -419,39 +420,47 @@ def test_golden_media_parquet_current(spark):
     assert got == fresh_rows
 
 
-def test_golden_ann_ivf_parquet_current(spark):
-    """dist/golden_ann_ivf.parquet regenerates identically from the
-    independent numpy IVF reimplementation (tools/gen_golden_ann.py), and
-    the distributed ivf_topk query reproduces the sf0.001 slice exactly
+@pytest.mark.parametrize(
+    "gen, rows_fn, query",
+    [
+        ("gen_golden_ann", "ivf_rows", "ann_ivf_topk"),
+        ("gen_golden_pq", "pq_rows", "ann_pq_topk"),
+        ("gen_golden_ivfpq", "ivfpq_rows", "ann_ivfpq_topk"),
+    ],
+    ids=["ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk"],
+)
+def test_golden_ann_ivf_parquet_current(spark, gen, rows_fn, query):
+    """Each ANN golden parquet (IVF, PQ, IVF-PQ) regenerates identically
+    from its independent numpy reimplementation (tools/gen_golden_*.py),
+    and the distributed query reproduces the sf0.001 slice exactly
     (driver-harness parity for the other SFs is covered by
     tools/check_oracles.py / the driver itself)."""
+    import importlib
     import sys
     from pathlib import Path
 
     import duckdb
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from gen_golden_ann import FINGERPRINT_SQL, OUT, ivf_rows
+    golden = importlib.import_module(gen)
 
     sf_dir = "/root/testdata/sf0.001"
     fp = duckdb.sql(
-        FINGERPRINT_SQL.format(src=f"'{sf_dir}/embeddings.parquet'")
+        golden.FINGERPRINT_SQL.format(src=f"'{sf_dir}/embeddings.parquet'")
     ).fetchone()[0]
-    fresh = sorted(ivf_rows(sf_dir))
+    fresh = sorted(getattr(golden, rows_fn)(sf_dir))
     on_disk = sorted(
         tuple(r)
         for r in duckdb.sql(
-            f"SELECT query_id, nbr_id, rank FROM read_parquet('{OUT}') "
+            f"SELECT query_id, nbr_id, rank FROM read_parquet('{golden.OUT}') "
             f"WHERE corpus_fp = '{fp}'"
         ).fetchall()
     )
-    assert on_disk == fresh, (
-        "dist/golden_ann_ivf.parquet stale — re-run tools/gen_golden_ann.py"
-    )
+    assert on_disk == fresh, f"{golden.OUT} stale — re-run tools/{gen}.py"
 
-    from pdf_extract_spark.queries import ann_ivf_topk
+    from pdf_extract_spark import queries
 
-    got = sorted(tuple(r) for r in ann_ivf_topk(spark, sf_dir).collect())
+    got = sorted(tuple(r) for r in getattr(queries, query)(spark, sf_dir).collect())
     assert got == fresh
 
 
