@@ -132,20 +132,18 @@ class Document:
             content = decode_stream(
                 obj.raw, obj.dict.get("Filter"), obj.dict.get("DecodeParms")
             )
-            w = obj.dict["W"]
+            w = obj.dict.get("W")
+            if not isinstance(w, list) or any(type(x) is not int or x < 0 for x in w) or sum(w) == 0:
+                raise PdfError(f"malformed xref stream /W {w!r}")
             size = obj.dict.get("Size", 0)
             index = obj.dict.get("Index", [0, size])
             rowlen = sum(w)
             fields = []
-            p = 0
-            while p + rowlen <= len(content):
+            for p in range(0, len(content) - rowlen + 1, rowlen):
                 row = []
                 for width in w:
-                    val = 0
-                    for _ in range(width):
-                        val = (val << 8) | content[p]
-                        p += 1
-                    row.append(val)
+                    row.append(int.from_bytes(content[p : p + width], "big"))
+                    p += width
                 fields.append(row)
             r = 0
             for ii in range(0, len(index), 2):
@@ -211,9 +209,9 @@ class Document:
                 obj = self._decrypt_object(obj, num, gen)
             if isinstance(obj, Stream) and not isinstance(obj.dict.get("Length"), int):
                 length = self.deref(obj.dict.get("Length"))
-                if isinstance(length, int):
+                if isinstance(length, int) and 0 <= length < len(obj.raw):
                     # re-slice with the resolved Length
-                    obj = Stream(obj.dict, obj.raw[:length] if length <= len(obj.raw) else obj.raw)
+                    obj = Stream(obj.dict, obj.raw[:length])
         elif num in self._in_objstm:
             stm_num, _idx = self._in_objstm[num]
             objs = self._load_objstm(stm_num)

@@ -246,10 +246,152 @@ S = PdfString
         (b"BI ID xEIx EI Q", [("BI", []), ("Q", [])]),
         (b"1_0 0 Td", [("Td", [10, 0])]),  # int('1_0') == 10: historic parity
         (b"/F1 9 Tf (a) Tj", [("Tf", [Name("F1"), 9]), ("Tj", [S(b"a")])]),
+        # a non-finite number reads like a malformed one: 0, or 0.0 with a '.'
+        (b"-nan 0 0 +inf 0 0 cm", [("cm", [0, 0, 0, 0, 0, 0])]),
+        (b"1e999 -Infinity 1.5e999 Td", [("Td", [0, 0, 0.0])]),
+        pytest.param(b"[" * 100_000 + b"(a) Tj", [("Tj", [])], id="unterminated-100000-deep-nest"),
+        # a malformed `<<` operand is lexed again from its second byte,
+        # which starts a hex string; also when the data ends on a key
+        (b"<< /A foo >> BDC", [("BDC", [S(b"\xaf")])]),
+        (b"<</A 1/B(>Q)/C", [("Q", [S(b"\xa1\xb0")])]),
     ],
 )
 def test_content_tokenizer_edge_cases(data, want):
     assert _typed(decode_content(data)) == _typed(want)
+
+
+def test_lexer_deep_unterminated_nest():
+    depth = 100_000
+    obj = Lexer(b"[" * depth).read_object()
+    for _ in range(depth - 1):
+        assert type(obj) is list and len(obj) == 1
+        obj = obj[0]
+    assert obj == []
+
+
+def test_long_digit_run_under_the_lowest_int_digit_limit():
+    # 640 is the lowest limit int() can be given; a longer all-digits run
+    # takes the general number rule instead of raising out of the lexer
+    import sys
+
+    if not hasattr(sys, "set_int_max_str_digits"):
+        pytest.skip("int() has no digit limit before Python 3.11")
+    old = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(640)
+    try:
+        assert decode_content(b"1" * 700 + b" 2 Td") == [("Td", [0, 2])]
+        assert _parse(b"5 " + b"0" * 700 + b" R") == 5
+    finally:
+        sys.set_int_max_str_digits(old)
+
+
+def test_negative_length_reads_like_a_missing_one():
+    src = b"1 0 obj << /Length -3 >> stream\nabcdef\nendstream\nendobj"
+    lex = Lexer(src)
+    _num, _gen, obj = lex.read_indirect_object()
+    assert obj.raw == b"abcdef" and lex.pos == len(src)
+    # an indirect /Length that resolves negative keeps the scanned body
+    b = PdfBuilder()
+    length = b.add(b"-3")
+    content = b"BT /F1 12 Tf 72 720 Td (negative) Tj ET"
+    c = b.add(b"<< /Length %d 0 R >>\nstream\n" % length + content + b"\nendstream")
+    font = b.add(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    page = b.add(b"<< /Type /Page /Parent 5 0 R /Contents %d 0 R /Resources << /Font << /F1 %d 0 R >> >> >>" % (c, font))
+    b.add(b"<< /Type /Pages /Kids [%d 0 R] /Count 1 /MediaBox [0 0 612 792] >>" % page)
+    doc = load_mem(b.build(b.add(b"<< /Type /Catalog /Pages 5 0 R >>")))
+    assert doc.get_page_content(doc.get_pages()[0]) == content
+
+
+# Runs in a child with a 1 GiB address-space cap and a 10 s timeout, so a
+# parser loop that never ends fails this test instead of hanging the suite.
+_EXTRACT_CHILD = """
+import resource, sys, time
+resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+from pdf_extract_spark.extract import extract_spans_flat_from_mem
+pdf = sys.stdin.buffer.read()
+t0 = time.perf_counter()
+r = extract_spans_flat_from_mem(pdf)
+print(repr((time.perf_counter() - t0, r[5], r[1])))
+"""
+
+
+@pytest.mark.parametrize("w", [b"[0 0 0]", b"[1 -1 0]", b"[1 2 true]", b"(x)"])
+def test_malformed_xref_stream_widths_fall_back_to_the_scan(w):
+    import ast
+    import os
+    import subprocess
+    import sys
+
+    b = PdfBuilder()
+    c = b.add_stream("", b"BT /F1 12 Tf 72 720 Td (widths) Tj ET")
+    b.add(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    b.add(b"<< /Type /Page /Parent 4 0 R /Contents %d 0 R /Resources << /Font << /F1 2 0 R >> >> >>" % c)
+    b.add(b"<< /Type /Pages /Kids [3 0 R] /Count 1 /MediaBox [0 0 612 792] >>")
+    classic = b.build(b.add(b"<< /Type /Catalog /Pages 4 0 R >>"))
+    out = bytearray(classic[: classic.index(b"xref\n")])
+    xref_pos = len(out)
+    rows = bytes(12)
+    out += (
+        b"6 0 obj\n<< /Type /XRef /Size 7 /W " + w + b" /Root 5 0 R /Length %d >>\nstream\n" % len(rows)
+        + rows + b"\nendstream\nendobj\nstartxref\n%d\n%%%%EOF" % xref_pos
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _EXTRACT_CHILD], input=bytes(out), capture_output=True,
+        cwd=repo, timeout=10, check=True,
+    )
+    elapsed, error, texts = ast.literal_eval(res.stdout.decode())
+    assert error is None and "widths" in texts, (error, texts)
+    assert elapsed < 2.0, elapsed
+
+
+# Same cap and timeout, for the lexer alone: prints (elapsed, result), the
+# result being the object read, or the operators of a content stream.
+_LEX_CHILD = """
+import resource, sys, time
+resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+from pdf_extract_spark.pdfmini.content import decode_content
+from pdf_extract_spark.pdfmini.objects import Lexer
+data = sys.stdin.buffer.read()
+t0 = time.perf_counter()
+if sys.argv[1] == "object":
+    r = Lexer(data).read_object()
+else:
+    r = [op for op, _operands in decode_content(data)]
+print(repr((time.perf_counter() - t0, r)))
+"""
+
+
+@pytest.mark.parametrize(
+    "mode, data, want",
+    [
+        # every `>>` finds the key /K waiting for a value
+        pytest.param("object", b"<< " + b"/K >> " * 50_000, {"K": None}, id="object-waiting-key"),
+        pytest.param("content", b"/T << " + b"/K >> " * 50_000 + b"BDC", ["BDC"], id="operand-waiting-key"),
+        # a `<<` operand that fails with 50,000 `<<` open inside it, or
+        # with 900 open and a long tail after them
+        pytest.param("content", b"<< <a> " * 50_000 + b"x", ["x"], id="operand-nest-fails"),
+        pytest.param(
+            "content", b"<< <a> " * 900 + b"<a> " * 50_000 + b"x", ["x"], id="operand-tail-fails"
+        ),
+        # 50,000 `<` read as `<<` operands at both byte alignments
+        pytest.param("content", b"<" * 50_000 + b"x", [], id="operand-run-of-lt"),
+    ],
+)
+def test_hostile_dict_frames_cost_linear_time(mode, data, want):
+    import ast
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _LEX_CHILD, mode], input=data, capture_output=True,
+        cwd=repo, timeout=10, check=True,
+    )
+    elapsed, got = ast.literal_eval(res.stdout.decode())
+    assert got == want
+    assert elapsed < 2.0, elapsed
 
 
 def test_builder_roundtrip_offsets():

@@ -16,7 +16,8 @@ from pdf_extract_spark.pdfmini.filters import (
     lzw_decode,
     runlength_decode,
 )
-from pdf_extract_spark.pdfmini.objects import Lexer, PdfString
+from pdf_extract_spark.pdfmini.content import decode_content
+from pdf_extract_spark.pdfmini.objects import Lexer, Name, PdfString, Ref
 
 payload = st.binary(min_size=0, max_size=512)
 
@@ -89,6 +90,116 @@ def test_literal_string_roundtrip(data):
 def test_hex_string_roundtrip(data):
     obj = Lexer(b"<" + data.hex().encode() + b">").read_object()
     assert bytes(obj) == data
+
+
+# Random object trees as (value, tokens): nested arrays and dicts over names
+# with #xx escapes, plain/escaped/hex strings, ints, reals, refs, booleans
+# and null.  Serialized with random whitespace and comments between tokens,
+# they must read back type-exactly through the one lexer, as an object and
+# as a content-stream operand.
+_DELIMS = b"()<>[]{}/%"
+_WS = b"\x00\t\n\x0c\r "
+
+
+@st.composite
+def _pdf_name(draw):
+    raw = draw(st.binary(max_size=8))
+    escape = draw(st.lists(st.booleans(), min_size=len(raw), max_size=len(raw)))
+    tok = b"/" + b"".join(
+        b"#%02x" % c if e or c == 0x23 or c in _DELIMS or c in _WS else bytes([c])
+        for c, e in zip(raw, escape)
+    )
+    return raw.decode("latin-1"), tok
+
+
+@st.composite
+def _pdf_scalar(draw):
+    kind = draw(st.sampled_from(["null", "bool", "int", "real", "name", "plain", "escaped", "hex", "ref"]))
+    if kind == "null":
+        return None, [b"null"]
+    if kind == "bool":
+        v = draw(st.booleans())
+        return v, [b"true" if v else b"false"]
+    if kind == "int":
+        v = draw(st.integers(-(2**40), 2**40))
+        return v, [b"%d" % v]
+    if kind == "real":
+        v = draw(st.floats(allow_nan=False, allow_infinity=False))
+        return v, [repr(v).encode()]
+    if kind == "name":
+        text, tok = draw(_pdf_name())
+        return Name(text), [tok]
+    if kind == "plain":
+        v = draw(st.binary(max_size=12).map(lambda b: b.translate(None, b"\\()")))
+        return PdfString(v), [b"(" + v + b")"]
+    if kind == "escaped":
+        v = draw(st.binary(max_size=12))
+        return PdfString(v), [_escape_literal(v)]
+    if kind == "hex":
+        v = draw(st.binary(max_size=12))
+        h = v.hex().encode()
+        return PdfString(v), [b"<" + (h.upper() if draw(st.booleans()) else h) + b">"]
+    num, gen = draw(st.integers(0, 10**6)), draw(st.integers(0, 65535))
+    return Ref(num, gen), [b"%d" % num, b"%d" % gen, b"R"]
+
+
+def _pdf_composite(children):
+    def array(items):
+        return [v for v, _ in items], [b"["] + [t for _, ts in items for t in ts] + [b"]"]
+
+    def dictionary(entries):
+        d, toks = {}, [b"<<"]
+        for (key, key_tok), (v, ts) in entries:
+            d[key] = v
+            toks += [key_tok] + ts
+        return d, toks + [b">>"]
+
+    return st.one_of(
+        st.lists(children, max_size=5).map(array),
+        st.lists(st.tuples(_pdf_name(), children), max_size=5).map(dictionary),
+    )
+
+
+_pdf_tree = st.recursive(_pdf_scalar(), _pdf_composite, max_leaves=25)
+_separator = st.sampled_from([b" ", b"\n", b"\r\n", b"\t", b"\x0c", b"\x00", b"  ", b" %c\n", b"%x\r"])
+
+
+def _serialize(draw, toks):
+    out = []
+    for i, t in enumerate(toks):
+        out.append(t)
+        # a separator between tokens (and sometimes none where a
+        # delimiter already separates them)
+        if i + 1 < len(toks):
+            nxt = toks[i + 1]
+            needed = (t[0] == 0x2F or t[-1] not in _DELIMS) and nxt[0] not in _DELIMS
+            if needed or draw(st.booleans()):
+                out.append(draw(_separator))
+    return b"".join(out)
+
+
+def _exact(x):
+    """A value with its exact types, dict key types included."""
+    if isinstance(x, (list, tuple)):
+        return type(x).__name__, [_exact(e) for e in x]
+    if isinstance(x, dict):
+        return "dict", [(type(k).__name__, k, _exact(v)) for k, v in x.items()]
+    if isinstance(x, Ref):
+        return "Ref", x.num, x.gen
+    return type(x).__name__, x
+
+
+@given(_pdf_tree, st.data())
+@settings(max_examples=300, deadline=None)
+def test_object_tree_reads_back_exactly(tree, data):
+    value, toks = tree
+    src = _serialize(data.draw, toks)
+    lead = data.draw(_separator)
+    lex = Lexer(lead + src + data.draw(_separator) + b"endobj")
+    assert _exact(lex.read_object()) == _exact(value)
+    assert lex.pos == len(lead) + len(src)
+    ops = decode_content(b"/Tag << /V " + src + b" >> BDC")
+    assert _exact(ops) == _exact([("BDC", [Name("Tag"), {"V": value}])])
 
 
 @given(st.lists(st.integers(min_value=-(2**31), max_value=2**31 - 1), max_size=20))
